@@ -36,7 +36,7 @@ re-classifies from scratch) only closes the delta.
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -663,18 +663,10 @@ def _local_direct_np(
     return _pairs_to_df(closure_df, d_out[o2], a_out[o2], "child", "parent")
 
 
-def _local_direct(closure_df: DataFrame, anc: dict, edges_df: DataFrame | None):
-    """In-process witness-form direct-edge derivation for a closure that
-    carries the local ancestor map.  Work-capped: returns None (caller
-    falls back to the distributed plan) when the witness sweep would
-    exceed ~20M in-process marks."""
-    if edges_df is not None:
-        pdf = edges_df.limit(_LOCAL_TC_MAX_EDGES + 1).toPandas()
-        if len(pdf) > _LOCAL_TC_MAX_EDGES:
-            return None
-        elist = list(zip(pdf.iloc[:, 0].tolist(), pdf.iloc[:, 1].tolist()))
-    else:
-        elist = [(d, a) for d, s in anc.items() for a in s]
+def _direct_map(anc: dict, elist) -> dict | None:
+    """In-process witness-form direct edges: node → set(direct parents)
+    from a strict ancestor map and its (last-hop) witness edge list.
+    Work-capped: None when the sweep would exceed ~20M marks."""
     desc: dict = {}
     for d, s in anc.items():
         for a in s:
@@ -695,6 +687,24 @@ def _local_direct(closure_df: DataFrame, anc: dict, edges_df: DataFrame | None):
         keep = {a for a in s if (d, a) not in nond}
         if keep:
             out_map[d] = keep
+    return out_map
+
+
+def _local_direct(closure_df: DataFrame, anc: dict, edges_df: DataFrame | None):
+    """In-process witness-form direct-edge derivation for a closure that
+    carries the local ancestor map.  Work-capped: returns None (caller
+    falls back to the distributed plan) when the witness sweep would
+    exceed ~20M in-process marks."""
+    if edges_df is not None:
+        pdf = edges_df.limit(_LOCAL_TC_MAX_EDGES + 1).toPandas()
+        if len(pdf) > _LOCAL_TC_MAX_EDGES:
+            return None
+        elist = list(zip(pdf.iloc[:, 0].tolist(), pdf.iloc[:, 1].tolist()))
+    else:
+        elist = [(d, a) for d, s in anc.items() for a in s]
+    out_map = _direct_map(anc, elist)
+    if out_map is None:
+        return None
     return _local_anc_to_df(closure_df, out_map, "child", "parent")
 
 
@@ -769,6 +779,8 @@ class Classified:
     pv_names: DataFrame
     gci_names: DataFrame
     gen_edges: DataFrame
+    # set when the surfaces were shipped from the in-process kernel
+    local: "LocalClassified | None" = field(default=None, repr=False, compare=False)
 
     def has_gci_names(self) -> bool:
         """Whether the classification introduced any GCI names — cached:
@@ -899,6 +911,12 @@ def _covered_pairs(
 # Equivalence of the two paths is gated in tests/test_closure.py (fixture +
 # randomized synthetic ontologies, seeded and unseeded, both directions
 # forced via SUBONT_LOCAL_CLASSIFY).
+#
+# Three steps: bounded collects (_collect_local_tables), the rule engine
+# over those in-memory tables (_classify_tables), and shipping
+# (ship_classified).  The shipped Classified keeps the engine's result as
+# its ``local`` carrier, so a seeded re-classify and the in-process
+# extraction (pipeline_local) reuse it without re-collecting anything.
 # ---------------------------------------------------------------------------
 
 _LOCAL_CLASSIFY_MAX_AXIOMS = int(os.environ.get("SUBONT_LOCAL_CLASSIFY_MAX_AXIOMS", "50000"))
@@ -915,64 +933,112 @@ def _local_ids_to_df(spark, ids, name: str) -> DataFrame:
     )
 
 
-def _maybe_local_classify(
-    ont: Ontology,
-    max_rounds: int,
-    allow_equivalences: bool,
-    seed: "Classified | None",
-) -> "Classified | None":
-    if os.environ.get("SUBONT_LOCAL_CLASSIFY", "auto") == "off":
+@dataclass
+class LocalTables:
+    """An ontology's tables as driver-side python values (ids stay exact
+    ints; Arrow collects never round-trip a nullable long through
+    float64).
+
+    axioms — (axiom_id, sub_id, is_equiv, is_gci, gci_super, rhs) with
+             rhs a tuple of (kind, ref_id) pairs
+    pvs    — pv_id → (role_id, filler_concept, filler_refs, is_data,
+             value), filler_refs a tuple of (kind, ref_id) pairs or None
+    """
+
+    axioms: list
+    pvs: dict
+    subprops: list        # (child, parent)
+    role_chains: list     # (super_role, left_role, right_role)
+    transitive_roles: list
+
+
+def _refs(refs) -> tuple | None:
+    return None if refs is None else tuple((r["kind"], r["ref_id"]) for r in refs)
+
+
+def _collect_local_tables(ont: Ontology) -> LocalTables | None:
+    """Bounded Arrow collects of the tables classify reads, cheapest
+    bail-out first (at production scale the first limit-collect is one
+    metadata-sized job and the caller falls through to the distributed
+    fixpoint).  None when any table is over its gate."""
+
+    def rows(df, cap):
+        out = df.limit(cap + 1).toArrow().to_pylist()
+        return None if len(out) > cap else out
+
+    ax = rows(ont.axioms, _LOCAL_CLASSIFY_MAX_AXIOMS)
+    if ax is None:
         return None
-    seed_anc = seed_gen = None
-    if seed is not None:
-        seed_anc = _get_local_anc(seed.closure)
-        seed_gen = getattr(seed.gen_edges, "_subont_local_pairs", None)
-        if seed_anc is None or seed_gen is None:
-            return None  # seed came from the distributed path: stay distributed
-    # bounded Arrow collects, cheapest bail-out first (at production scale
-    # the first limit-collect is one metadata-sized job and we fall through
-    # to the distributed fixpoint)
-    ax_pdf = ont.axioms.limit(_LOCAL_CLASSIFY_MAX_AXIOMS + 1).toPandas()
-    if len(ax_pdf) > _LOCAL_CLASSIFY_MAX_AXIOMS:
-        return None
-    pv_pdf = ont.pvs.limit(_LOCAL_CLASSIFY_MAX_PVS + 1).toPandas()
-    if len(pv_pdf) > _LOCAL_CLASSIFY_MAX_PVS:
-        return None
-    sp_pdf = ont.subprops.limit(_LOCAL_TC_MAX_EDGES + 1).toPandas()
-    if len(sp_pdf) > _LOCAL_TC_MAX_EDGES:
+    pv = rows(ont.pvs, _LOCAL_CLASSIFY_MAX_PVS)
+    if pv is None:
         return None
     # same limit-gate as every other kernel collect: a pathological RBox
     # must fall back distributed, never pull unbounded rows to the driver
-    rc_pdf = ont.role_chains.limit(_LOCAL_TC_MAX_EDGES + 1).toPandas()
-    if len(rc_pdf) > _LOCAL_TC_MAX_EDGES:
+    sp = rows(ont.subprops, _LOCAL_TC_MAX_EDGES)
+    if sp is None:
         return None
-    tr_pdf = ont.transitive_roles.limit(_LOCAL_TC_MAX_EDGES + 1).toPandas()
-    if len(tr_pdf) > _LOCAL_TC_MAX_EDGES:
+    rc = rows(ont.role_chains, _LOCAL_TC_MAX_EDGES)
+    if rc is None:
         return None
-    spark = ont.axioms.sparkSession
-
-    # ---- in-process mirror of the table prep ------------------------------
-    axioms = list(
-        zip(
-            ax_pdf["axiom_id"].tolist(), ax_pdf["sub_id"].tolist(),
-            ax_pdf["is_equiv"].tolist(), ax_pdf["is_gci"].tolist(),
-            ax_pdf["gci_super"].tolist(), ax_pdf["rhs"].tolist(),
-        )
+    tr = rows(ont.transitive_roles, _LOCAL_TC_MAX_EDGES)
+    if tr is None:
+        return None
+    return LocalTables(
+        axioms=[
+            (r["axiom_id"], r["sub_id"], r["is_equiv"], r["is_gci"], r["gci_super"], _refs(r["rhs"]))
+            for r in ax
+        ],
+        pvs={
+            r["pv_id"]: (r["role_id"], r["filler_concept"], _refs(r["filler_refs"]), r["is_data"], r["value"])
+            for r in pv
+        },
+        subprops=[(r["child"], r["parent"]) for r in sp],
+        role_chains=[(r["super_role"], r["left_role"], r["right_role"]) for r in rc],
+        transitive_roles=[r["role_id"] for r in tr],
     )
+
+
+@dataclass
+class LocalClassified:
+    """The in-process classification a ``Classified`` was shipped from:
+    the collected inputs, the ``Ontology`` object they came from, and
+    the rule engine's maps.  Consumers that hold this carrier (the
+    seeded re-classify, the in-process extraction) never re-collect."""
+
+    tables: LocalTables
+    ont: Ontology
+    anc: dict              # node → set(strict ancestors): the closure
+    gen: set               # generating (child, parent) edges
+    direct: dict           # node → set(direct parents)
+    prop_anc: dict         # role → set(strict super-roles)
+    non_primitive: set
+    pv_ids: set
+    gci_ids: set
+    cp_map: dict | None = None  # D4 closest-primitive map, built on first use
+
+
+def _classify_tables(
+    t: LocalTables,
+    ont: Ontology,
+    max_rounds: int = 12,
+    allow_equivalences: bool = False,
+    seed: LocalClassified | None = None,
+) -> LocalClassified | None:
+    """The four rules to fixpoint over in-memory tables.  None when the
+    closure grows past the pair cap (caller goes distributed)."""
     edges: set = set()
-    equivs: list = []  # (sub_id, conj tuple) for is_equiv rows (GCIs included)
+    equivs: list = []  # (sub_id, conj list) for is_equiv rows (GCIs included)
     gci_ids: set = set()
     equiv_subs: set = set()
-    for _aid, sub, is_eq, is_gci, gsup, rhs in axioms:
-        refs = [int(r["ref_id"]) for r in rhs]
+    for _aid, sub, is_eq, is_gci, gsup, rhs in t.axioms:
+        refs = [r for _k, r in rhs]
         for ref in refs:
             if sub != ref:
                 edges.add((sub, ref))
         if is_gci:
             gci_ids.add(sub)
-            # pandas renders a nullable long column as float64: NaN-guard
-            if gsup is not None and gsup == gsup and sub != int(gsup):
-                edges.add((sub, int(gsup)))
+            if gsup is not None and sub != gsup:
+                edges.add((sub, gsup))
         if is_eq:
             equivs.append((sub, refs))
             equiv_subs.add(sub)
@@ -984,27 +1050,20 @@ def _maybe_local_classify(
     pv_role: dict = {}
     simple_by_id: dict = {}     # pv_id -> (role, filler)
     simple_by_rf: dict = {}     # (role, filler) -> [pv_id]
-    pv_ids: list = []
-    for row in pv_pdf.itertuples(index=False):
-        pid, role = int(row.pv_id), int(row.role_id)
-        pv_ids.append(pid)
+    for pid, (role, filler, frefs, is_data, value) in t.pvs.items():
         pv_role[pid] = role
-        if row.filler_concept is not None and not (
-            isinstance(row.filler_concept, float) and row.filler_concept != row.filler_concept
-        ):
-            f = int(row.filler_concept)
-            pv_conj[pid] = {f}
-            simple_by_id[pid] = (role, f)
-            simple_by_rf.setdefault((role, f), []).append(pid)
-        elif row.is_data:
-            pv_conj[pid] = {("v", row.value)}
+        if filler is not None:
+            pv_conj[pid] = {filler}
+            simple_by_id[pid] = (role, filler)
+            simple_by_rf.setdefault((role, filler), []).append(pid)
+        elif is_data:
+            pv_conj[pid] = {("v", value)}
         else:
-            pv_conj[pid] = {int(r["ref_id"]) for r in row.filler_refs}
+            pv_conj[pid] = {r for _k, r in frefs or ()}
 
     # role machinery: strict subproperty closure + reflexive compat
     sp_parents: dict = {}
-    for row in sp_pdf.itertuples(index=False):
-        c, p = int(row.child), int(row.parent)
+    for c, p in t.subprops:
         if c != p:
             sp_parents.setdefault(c, set()).add(p)
     prop_anc = _local_close(sp_parents, _LOCAL_TC_MAX_PAIRS)
@@ -1014,10 +1073,7 @@ def _maybe_local_classify(
     def role_ok(r1, r2) -> bool:
         return r1 == r2 or r2 in prop_anc.get(r1, ())
 
-    chains = [
-        (int(r.super_role), int(r.left_role), int(r.right_role))
-        for r in rc_pdf.itertuples(index=False)
-    ] + [(int(r.role_id),) * 3 for r in tr_pdf.itertuples(index=False)]
+    chains = list(t.role_chains) + [(r, r, r) for r in t.transitive_roles]
 
     # static per-chain pv1/pv2 candidate lists (role compat is loop-invariant)
     chain_sites = []
@@ -1030,12 +1086,11 @@ def _maybe_local_classify(
     parents: dict = {}
     for c, p in edges:
         parents.setdefault(c, set()).add(p)
-    if seed_anc:
-        for d, s in seed_anc.items():
-            parents.setdefault(d, set()).update(s)
     gen: set = set(edges)
-    if seed_gen:
-        gen |= seed_gen
+    if seed is not None:
+        for d, s in seed.anc.items():
+            parents.setdefault(d, set()).update(s)
+        gen |= seed.gen
 
     rvals: set = set()
     for cs in pv_conj.values():
@@ -1136,29 +1191,60 @@ def _maybe_local_classify(
                         "equivalent-class cycle detected; unsupported (reference assumes none)"
                     )
 
-    # ---- assemble Classified (all LocalRelations, zero jobs) ---------------
+    # witness sweep with gen as the (bounded) witness set
+    direct = _direct_map(anc, gen)
+    if direct is None:
+        return None
+    pv_ids = set(t.pvs)
+    return LocalClassified(
+        tables=t, ont=ont, anc=anc, gen=gen, direct=direct, prop_anc=prop_anc,
+        non_primitive=equiv_subs | pv_ids, pv_ids=pv_ids, gci_ids=gci_ids,
+    )
+
+
+def ship_classified(loc: LocalClassified) -> "Classified":
+    """The ``Classified`` surfaces of an in-process classification, as
+    LocalRelations (parquet scans above the ship threshold) — zero jobs.
+    The closure keeps its ancestor map for the local reduce kernels."""
+    ont = loc.ont
+    spark = ont.axioms.sparkSession
     tmpl = ont.axioms.select(
         F.col("sub_id").alias("child"), F.col("sub_id").alias("parent")
     )
-    closure_df = _local_anc_to_df(tmpl, anc, "desc", "anc")
-    closure_df._subont_local_anc = anc
+    closure_df = _local_anc_to_df(tmpl, loc.anc, "desc", "anc")
+    closure_df._subont_local_anc = loc.anc
     gen_map: dict = {}
-    for c, p in gen:
+    for c, p in loc.gen:
         gen_map.setdefault(c, set()).add(p)
-    gen_df = _local_anc_to_df(tmpl, gen_map, "child", "parent")
-    gen_df._subont_local_pairs = gen
-    # witness sweep with gen as the (bounded) witness set; falls back to
-    # the distributed witness-form plan if the sweep exceeds its work cap
-    direct = derive_direct_edges(closure_df, edges=gen_df)
     return Classified(
         closure=closure_df,
-        direct=direct,
-        non_primitive=_local_ids_to_df(spark, equiv_subs | set(pv_ids), "id"),
-        prop_closure=_local_anc_to_df(tmpl, prop_anc, "desc", "anc"),
-        pv_names=_local_ids_to_df(spark, set(pv_ids), "pv_id"),
-        gci_names=_local_ids_to_df(spark, gci_ids, "gci_id"),
-        gen_edges=gen_df,
+        direct=_local_anc_to_df(tmpl, loc.direct, "child", "parent"),
+        non_primitive=_local_ids_to_df(spark, loc.non_primitive, "id"),
+        prop_closure=_local_anc_to_df(tmpl, loc.prop_anc, "desc", "anc"),
+        pv_names=_local_ids_to_df(spark, loc.pv_ids, "pv_id"),
+        gci_names=_local_ids_to_df(spark, loc.gci_ids, "gci_id"),
+        gen_edges=_local_anc_to_df(tmpl, gen_map, "child", "parent"),
+        local=loc,
     )
+
+
+def _maybe_local_classify(
+    ont: Ontology,
+    max_rounds: int,
+    allow_equivalences: bool,
+    seed: "Classified | None",
+) -> "Classified | None":
+    if os.environ.get("SUBONT_LOCAL_CLASSIFY", "auto") == "off":
+        return None
+    if seed is not None and seed.local is None:
+        return None  # seed came from the distributed path: stay distributed
+    tables = _collect_local_tables(ont)
+    if tables is None:
+        return None
+    loc = _classify_tables(
+        tables, ont, max_rounds, allow_equivalences, seed.local if seed is not None else None
+    )
+    return ship_classified(loc) if loc is not None else None
 
 
 def classify(

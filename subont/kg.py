@@ -93,6 +93,7 @@ def _local_kg(spark: SparkSession, pdf):
     (caller falls back to the distributed plan).  The row work is
     pandas/numpy-vectorized (guide §4.2) and the result surfaces are
     lazy (_LazyKGResult)."""
+    import numpy as np
     import pandas as pd
 
     from .closure import _LOCAL_TC_MAX_PAIRS, _local_close
@@ -178,11 +179,14 @@ def _local_kg(spark: SparkSession, pdf):
     direct = [(d, a) for d, s in anc.items() for a in s if (d, a) not in nond]
 
     # --- attribute triples, most-specific filler per (subj, role) ---
+    # a role-less attr() reads back as None or NaN; distinct NaN objects
+    # hash apart, so normalize to None before grouping on (subj, role)
+    role = [None if r is None or r != r else r for r in pdf["role"].tolist()]
     attr_mask = stype_np == "attr"
     attr_pdf = pd.DataFrame(
         {
             "a": c1_np[attr_mask],
-            "r": pdf["role"].to_numpy()[attr_mask],
+            "r": np.array(role, dtype=object)[attr_mask],
             "b": c2_np[attr_mask],
         }
     ).drop_duplicates()
@@ -230,7 +234,6 @@ def _local_kg(spark: SparkSession, pdf):
     def _statements():
         import pyarrow as pa
 
-        role = [None if r is None or r != r else r for r in pdf["role"].tolist()]
         stmt_schema = (
             "repo string, path string, commit string, stype string, "
             "arg1 string, role string, arg2 string, score double"

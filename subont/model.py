@@ -106,13 +106,19 @@ EDGE_SCHEMA = T.StructType(
 )
 
 
+def _md5_60(s: str) -> int:
+    """The first 60 bits of md5(s) as a non-negative int — the Spark SQL
+    ``conv(substring(md5(s), 1, 15), 16, 10)`` id formula, in-process."""
+    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
+
+
 def _hash60(s: str) -> int:
     """Deterministic 60-bit content hash → negative long id.
 
     Shared by the driver-side builder and the distributed corpus path so
     the same expression always reifies to the same id (idempotent resume).
     """
-    return -(int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16) | 1)
+    return -(_md5_60(s) | 1)
 
 
 # ---------------------------------------------------------------------------

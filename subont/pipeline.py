@@ -10,6 +10,10 @@ against the reference CI fixture in tests/test_pipeline.py).
 Iterative stages localCheckpoint per round; at cluster scale these become
 reliable checkpoints to object storage, giving resume points (the
 lineage/metrics writer in subont.lineage records them).
+
+Below the local-classify gate the same stages run in-process instead
+(subont.pipeline_local): at that size the ~600 scheduler round-trips of
+this pipeline are the whole wall clock.
 """
 
 from __future__ import annotations
@@ -362,6 +366,32 @@ def _nnf_entity_ids(nnf_rows: DataFrame, prop_defs: DataFrame, ont: Ontology) ->
     return out.filter(F.col("id") > 0).distinct()
 
 
+_RBOX_STOP = {OBJECT_ATTRIBUTE_TOP, DATA_ATTRIBUTE_TOP}
+
+
+def rbox_walk(subprops, roles) -> set:
+    """P8 over in-memory edges: every stated (child, parent) SubPropertyOf
+    edge on a role's super chain, stopping at the attribute tops."""
+    children: dict = {}
+    for c, p in subprops:
+        children.setdefault(c, []).append(p)
+    frontier = set(roles)
+    visited = set(frontier)
+    acc: set = set()
+    while frontier:
+        nxt = set()
+        for c in frontier:
+            if c in _RBOX_STOP:
+                continue
+            for p in children.get(c, ()):
+                acc.add((c, p))
+                if p not in visited:
+                    nxt.add(p)
+                    visited.add(p)
+        frontier = nxt
+    return acc
+
+
 def _populate_rbox(
     ont: Ontology, sig_roles: DataFrame, driver_side_max: int = 100_000
 ) -> DataFrame:
@@ -375,27 +405,13 @@ def _populate_rbox(
     collected edge list, exactly like any broadcast dimension lookup
     (one job instead of one per chain level).  Above the bound it falls
     back to the batched frontier semi-join walk."""
-    stop = {OBJECT_ATTRIBUTE_TOP, DATA_ATTRIBUTE_TOP}
     spark = ont.subprops.sparkSession
     edges = ont.subprops.limit(driver_side_max + 1).collect()
     if len(edges) <= driver_side_max:
-        children: dict[int, list[int]] = {}
-        for r in edges:
-            children.setdefault(r.child, []).append(r.parent)
-        frontier = {r.role_id for r in sig_roles.select("role_id").distinct().collect()}
-        visited = set(frontier)
-        acc: set[tuple[int, int]] = set()
-        while frontier:
-            nxt = set()
-            for c in frontier:
-                if c in stop:
-                    continue
-                for p in children.get(c, ()):
-                    acc.add((c, p))
-                    if p not in visited:
-                        nxt.add(p)
-                        visited.add(p)
-            frontier = nxt
+        acc = rbox_walk(
+            [(r.child, r.parent) for r in edges],
+            {r.role_id for r in sig_roles.select("role_id").distinct().collect()},
+        )
         return (
             spark.createDataFrame(sorted(acc), "child long, parent long")
             if acc
@@ -406,7 +422,7 @@ def _populate_rbox(
     visited = frontier
     acc_df = None
     for _ in range(32):
-        frontier = frontier.filter(~F.col("child").isin(list(stop)))
+        frontier = frontier.filter(~F.col("child").isin(list(_RBOX_STOP)))
         step = ont.subprops.join(frontier, "child", "left_semi")
         acc_df = step if acc_df is None else acc_df.unionByName(step)
         nxt = (
@@ -680,7 +696,12 @@ def compute_subontology(
 ) -> ExtractionResult:
     """End-to-end extraction (SubOntologyExtractionHandler.computeSubontology,
     :99-138): focus definitions → expansion → RBox → groupers → closure
-    completion → shrink → NNF."""
+    completion → shrink → NNF.
+
+    When ``src_cl`` was classified in-process for this same ``ont``
+    object (``src_cl.local``), the extraction runs in-process
+    (``pipeline_local``); ``dataclasses.replace(src_cl, local=None)``
+    forces the DataFrame pipeline below."""
     import os as _os
     import time as _t
 
@@ -707,6 +728,16 @@ def compute_subontology(
             _j0 = j
 
     options = options or RedundancyOptions()
+    # P1: reify + classify source (done by caller via model tables here)
+    src_cl = src_cl or classify(ont)
+    if src_cl.local is not None and src_cl.local.ont is ont:
+        # below the local-classify gate: P2-P12 in-process over the
+        # tables the classify kernel already collected
+        from .pipeline_local import local_extraction
+
+        res = local_extraction(spark, ont, focus_ids, compute_rf2, options, src_cl)
+        if res is not None:
+            return res
     if isinstance(focus_ids, DataFrame):
         focus = focus_ids.select("concept_id")
     else:
@@ -714,10 +745,6 @@ def compute_subontology(
     if compute_rf2:
         focus = focus.unionByName(lit_concept_df(spark, BROWSER_RF2_METADATA)).distinct()
     focus = _chk(focus)
-
-    _phase("P1 classify source")
-    # P1: reify + classify source (done by caller via model tables here)
-    src_cl = src_cl or classify(ont)
 
     _phase("P2 focus definitions")
     # P2: focus authoring definitions

@@ -46,6 +46,38 @@ _LOCAL_REDUCE_MAX_ROWS = int(os.environ.get("SUBONT_LOCAL_REDUCE_MAX_ROWS", "300
 _LOCAL_REDUCE_ATOMIC = {"bigint", "int", "smallint", "tinyint", "string", "double", "float", "boolean"}
 
 
+def marked_members(by_set: dict, anc, weak: bool = True) -> set:
+    """(set, member) pairs the antichain drops, over in-memory sets.
+
+    ``by_set``: set key → member set; ``anc``: node → strict ancestor set
+    (anything with ``.get``).  weak=True marks members with a strict
+    descendant in their set (eliminate_weaker), weak=False members with
+    a strict ancestor in their set (eliminate_stronger)."""
+    marked = set()
+    for s, members in by_set.items():
+        for o in members:
+            ups = anc.get(o)
+            if not ups:
+                continue
+            hit = ups & members
+            if weak:
+                # every member above o is redundant (o is more specific)
+                for a in hit:
+                    if a != o:
+                        marked.add((s, a))
+            else:
+                # o has a strict ancestor in the set → o is "stronger"
+                if hit - {o}:
+                    marked.add((s, o))
+    return marked
+
+
+def reduce_sets(by_set: dict, anc) -> dict:
+    """eliminate_weaker over in-memory sets: set key → kept members."""
+    marked = marked_members(by_set, anc)
+    return {s: {c for c in ms if (s, c) not in marked} for s, ms in by_set.items()}
+
+
 def _local_reduce(
     cand: DataFrame, closure: DataFrame, set_col: str, cls_col: str, weak: bool
 ):
@@ -94,22 +126,7 @@ def _local_reduce(
     by_set: dict = {}
     for s, c in zip(sets, clss):
         by_set.setdefault(s, set()).add(c)
-    marked = set()
-    for s, members in by_set.items():
-        for o in members:
-            ups = anc.get(o)
-            if not ups:
-                continue
-            hit = ups & members
-            if weak:
-                # every member above o is redundant (o is more specific)
-                for a in hit:
-                    if a != o:
-                        marked.add((s, a))
-            else:
-                # o has a strict ancestor in the set → o is "stronger"
-                if hit - {o}:
-                    marked.add((s, o))
+    marked = marked_members(by_set, anc, weak)
     spark = cand.sparkSession
     if marked:
         keep = [(s, c) not in marked for s, c in zip(sets, clss)]

@@ -11,7 +11,7 @@ via the owltoolkit axiom→relationship conversion):
                                  members share the group number
 * property definition r ⊑ s   → (r, 116680003, s, 0)
 
-Relationship ids are generated with row_number + a vectorized Verhoeff
+Relationship ids are generated with row_number + a JVM-native Verhoeff
 check digit (writers/VerhoeffCheck.java:27-55, SCTIDSource.java:15-19) —
 deterministic ordering, never monotonically_increasing_id (breaks
 resume/retry determinism at scale).
@@ -19,14 +19,12 @@ resume/retry determinism at scale).
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from .model import CORE_MODULE, INFERRED_RELATIONSHIP, IS_A, MODIFIER_SOME, ROLE_GROUP, Ontology
+from .util import chk
 
 
 def _rf2_value_col(lit_col) -> F.Column:
@@ -158,23 +156,39 @@ _INV = [0, 4, 3, 2, 1, 5, 6, 7, 8, 9]
 
 
 def _make_verhoeff():
-    # factory-made (<locals> qualnames) → cloudpickle serializes the
-    # digit function and the UDF body BY VALUE, so executor workers
-    # never need the subont package on their PYTHONPATH
+    # factory-made (<locals> qualname) → cloudpickle serializes the digit
+    # function BY VALUE, so a python worker that runs it never needs the
+    # subont package on its PYTHONPATH
     def _verhoeff_digit(s: str) -> int:
         c = 0
         for i, ch in enumerate(reversed(s)):
             c = _D[c][_P[(i + 1) % 8][int(ch)]]
         return _INV[c]
 
-    @F.pandas_udf(T.StringType())
-    def verhoeff_udf(nums: pd.Series) -> pd.Series:  # pragma: no cover (executor)
-        return nums.map(lambda s: s + str(_verhoeff_digit(s)))
-
-    return _verhoeff_digit, verhoeff_udf
+    return _verhoeff_digit
 
 
-_verhoeff_digit, verhoeff_udf = _make_verhoeff()
+_verhoeff_digit = _make_verhoeff()
+
+
+def _sql_array(rows) -> str:
+    if isinstance(rows[0], list):
+        return "array(" + ", ".join(_sql_array(r) for r in rows) + ")"
+    return "array(" + ", ".join(str(x) for x in rows) + ")"
+
+
+def verhoeff_col(col: str) -> F.Column:
+    """String column ``col`` (a non-empty digit string) with its Verhoeff
+    check digit appended — a JVM-native expression (``aggregate`` over
+    the digits right to left, the tables as literal arrays), so id
+    generation never starts a python worker.  ``_verhoeff_digit`` is the
+    python oracle."""
+    c = f"`{col}`"
+    digit = (
+        f"aggregate(sequence(1, length({c})), 0, (acc, i) -> {_sql_array(_D)}[acc]"
+        f"[{_sql_array(_P)}[i % 8][cast(substring({c}, length({c}) - i + 1, 1) as int)]])"
+    )
+    return F.expr(f"concat({c}, cast({_sql_array(_INV)}[{digit}] as string))")
 
 
 def _global_row_number(df: DataFrame, order_cols: list[str], out_col: str = "rn") -> DataFrame:
@@ -235,7 +249,7 @@ def with_sctids(
             F.lit(partition),
         ),
     )
-    return base.withColumn("rel_id", verhoeff_udf(F.col("id_body"))).drop("rn", "id_body")
+    return base.withColumn("rel_id", verhoeff_col("id_body")).drop("rn", "id_body")
 
 
 def relationship_rf2_files(
@@ -248,6 +262,8 @@ def relationship_rf2_files(
     concrete file's destination column is ``value`` (header at :216)."""
     if "value" not in triples.columns:
         triples = triples.withColumn("value", F.lit(None).cast("string"))
+    # numbered ONCE: both files read the checkpointed base, instead of
+    # each write re-running the numbering window
     base = with_sctids(triples).select(
         F.col("rel_id").alias("id"),
         F.lit(effective_time).alias("effectiveTime"),
@@ -261,6 +277,7 @@ def relationship_rf2_files(
         F.lit(str(INFERRED_RELATIONSHIP)).alias("characteristicTypeId"),
         F.lit(str(MODIFIER_SOME)).alias("modifierId"),
     )
+    base = chk(base)
     common_tail = ["relationshipGroup", "typeId", "characteristicTypeId", "modifierId"]
     standard = base.filter(F.col("value").isNull()).select(
         "id", "effectiveTime", "active", "moduleId", "sourceId", "destinationId", *common_tail

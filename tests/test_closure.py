@@ -484,10 +484,10 @@ def test_local_classify_equals_distributed_fixture(spark, monkeypatch):
     ont = fixtures.dummy_ontology(spark)
     monkeypatch.setenv("SUBONT_LOCAL_CLASSIFY", "auto")
     loc = classify(ont)
-    assert hasattr(loc.gen_edges, "_subont_local_pairs")  # local kernel engaged
+    assert loc.local is not None  # local kernel engaged
     monkeypatch.setenv("SUBONT_LOCAL_CLASSIFY", "off")
     dist = classify(ont)
-    assert not hasattr(dist.gen_edges, "_subont_local_pairs")
+    assert dist.local is None
     assert _cl_sets(loc) == _cl_sets(dist)
 
 
@@ -500,10 +500,10 @@ def test_local_classify_equals_distributed_synth(spark, monkeypatch):
         ont = synthetic_ontology(spark, n_concepts=350, seed=seed, gci_every=64)
         monkeypatch.setenv("SUBONT_LOCAL_CLASSIFY", "auto")
         loc = classify(ont)
-        assert hasattr(loc.gen_edges, "_subont_local_pairs")
+        assert loc.local is not None
         # seeded re-classify stays local and is a no-op on the same axioms
         re_loc = classify(ont, seed=loc)
-        assert hasattr(re_loc.gen_edges, "_subont_local_pairs")
+        assert re_loc.local is not None
         monkeypatch.setenv("SUBONT_LOCAL_CLASSIFY", "off")
         dist = classify(ont)
         assert _cl_sets(loc) == _cl_sets(dist)
@@ -529,7 +529,7 @@ def test_local_classify_rbox_over_cap_falls_back(spark, monkeypatch):
     monkeypatch.setenv("SUBONT_LOCAL_CLASSIFY", "auto")
     loc = classify(ont)
     # the RBox gate tripped: no local kernel artifacts on the result
-    assert not hasattr(loc.gen_edges, "_subont_local_pairs")
+    assert loc.local is None
     monkeypatch.setenv("SUBONT_LOCAL_CLASSIFY", "off")
     dist = classify(ont)
     assert _cl_sets(loc) == _cl_sets(dist)
@@ -546,7 +546,7 @@ def test_local_classify_distributed_seed_stays_distributed(spark, monkeypatch):
     dist = classify(ont)
     monkeypatch.setenv("SUBONT_LOCAL_CLASSIFY", "auto")
     seeded = classify(ont, seed=dist)
-    assert not hasattr(seeded.gen_edges, "_subont_local_pairs")
+    assert seeded.local is None
     assert _cl_sets(seeded)[0] == _cl_sets(dist)[0]
 
 

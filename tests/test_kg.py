@@ -216,3 +216,27 @@ def test_connected_components_local_equals_distributed(spark, monkeypatch):
         monkeypatch.setenv("SUBONT_LOCAL_CC", "auto")
         loc = {(r.id, r.component) for r in connected_components(edges).collect()}
         assert dist == loc, seed
+
+
+def test_local_kg_roleless_attr_fillers_reduce(spark, monkeypatch):
+    """Two role-less attr() statements on one subject whose fillers are
+    IS-A related reduce to the single most specific triple — on the
+    local assembly exactly as on the distributed plan (the null role
+    must group as one key, never as distinct NaN objects)."""
+    src = spark.createDataFrame(
+        [("r", "p0", "c", "md", "isa(C9, C4) ; attr(C3, C9) ; attr(C3, C4)", "h")],
+        "repo string, path string, commit string, lang string, content string, sha256 string",
+    )
+
+    def attr_triples():
+        res = build_kg(spark, src)
+        rows = {tuple(r) for r in res.triples.filter(F.col("pred") != IS_A).collect()}
+        spark.catalog.clearCache()
+        return rows
+
+    monkeypatch.setenv("SUBONT_LOCAL_KG", "auto")
+    loc = attr_triples()
+    monkeypatch.setenv("SUBONT_LOCAL_KG", "off")
+    dist = attr_triples()
+    assert len(loc) == 1
+    assert loc == dist

@@ -90,11 +90,23 @@ def test_fake_decode_unpickles_without_subont(tmp_path):
     assert "DIM 4" in stdout
 
 
-def test_verhoeff_udf_inner_is_local_qualname():
-    # the pandas_udf wrapper's python function must carry a <locals>
-    # qualname — cloudpickle's by-reference lookup fails on those and
-    # falls back to by-value
-    from subont.rf2 import verhoeff_udf
+def test_verhoeff_col_matches_python_oracle(spark):
+    """The JVM-native check-digit expression (no python worker, nothing
+    to pickle) equals the python oracle ``_verhoeff_digit`` on 120k id
+    bodies of 1 to 18 digits, including the RF2 relationship-id shape."""
+    from pyspark.sql import functions as F
 
-    inner = getattr(verhoeff_udf, "func", None) or verhoeff_udf
-    assert "<locals>" in inner.__qualname__
+    from subont.rf2 import _verhoeff_digit, verhoeff_col
+
+    n = 120_000
+    bodies = spark.range(n).select(
+        F.expr(
+            "CASE WHEN id % 3 = 0 THEN concat(cast(id + 101 AS string), '100000302') "
+            "ELSE substring(concat(cast(id * 7919 + 104729 AS string), cast(id * 31 + 7 AS string), "
+            "cast(id AS string)), 1, cast(id % 18 + 1 AS int)) END"
+        ).alias("body")
+    )
+    got = bodies.select("body", verhoeff_col("body").alias("sctid")).collect()
+    assert len(got) == n
+    bad = [(r.body, r.sctid) for r in got if r.sctid != r.body + str(_verhoeff_digit(r.body))]
+    assert not bad, bad[:5]

@@ -11,8 +11,12 @@ from subont.pipeline import compute_subontology
 from subont.rf2 import relationship_rf2_rows, triples_from_nnf
 
 
-def test_dummy_extraction_golden_triples(dummy_extraction):
-    ont, res = dummy_extraction
+def test_dummy_extraction_golden_triples(dummy_extractions):
+    for res in dummy_extractions.values():
+        _check_golden_triples(res)
+
+
+def _check_golden_triples(res):
     triples = triples_from_nnf(res.nnf_rows, res.prop_defs, res.sub)
     got = {(r.subj, r.pred, r.obj, r.rel_group) for r in triples.collect()}
     assert got == set(fixtures.EXPECTED_TRIPLES)
@@ -26,8 +30,12 @@ def test_dummy_extraction_golden_triples(dummy_extraction):
         assert parents.get(cls) == expected, cls
 
 
-def test_dummy_rf2_relationship_rows(dummy_extraction):
-    ont, res = dummy_extraction
+def test_dummy_rf2_relationship_rows(dummy_extractions):
+    for res in dummy_extractions.values():
+        _check_rf2_relationship_rows(res)
+
+
+def _check_rf2_relationship_rows(res):
     triples = triples_from_nnf(res.nnf_rows, res.prop_defs, res.sub)
     rows = relationship_rf2_rows(triples).collect()
     assert len(rows) == len(fixtures.EXPECTED_TRIPLES)

@@ -5,55 +5,31 @@ role chains and transitivity (P6), multi-level supporting definitions
 (P11).  The oracle is the reference's own -verify-subontology property
 pair (V1/V2) plus targeted structural assertions.
 
-Ontology recipe follows manualtests/CreateTestOntology.java:29-52."""
+The ontology (the ``rich`` fixture in conftest.py) follows
+manualtests/CreateTestOntology.java:29-52."""
 
 import pyspark.sql.functions as F
 import pytest
 
-from subont.model import And, IS_A, OntologyBuilder, Some
-from subont.pipeline import compute_subontology
+from subont.model import IS_A
 from subont.rf2 import triples_from_nnf
 from subont.verify import verify_focus_equivalence, verify_transitive_closure_equal
 
-TOP = 138875005
-R, S, T_ROLE = 100100, 100200, 100300
+S = 100200  # the focus-40 attribute role of the rich fixture
 
 
 @pytest.fixture(scope="module")
-def rich(spark):
-    b = OntologyBuilder()
-    # primitive backbone
-    b.add_subclass(10, TOP)      # grouper branch A
-    b.add_subclass(11, 10)
-    b.add_subclass(12, 11)
-    b.add_subclass(20, TOP)      # grouper branch B (fillers)
-    b.add_subclass(21, 20)
-    b.add_subclass(22, 21)
-    # defined supporting concept above the focus: 30 ≡ 11 ⊓ ∃R.21
-    b.add_equiv(30, And([11, Some(R, 21)]))
-    # focus: 40 ≡ 30 ⊓ ∃S.22  (pulls 30's definition via rule 1)
-    b.add_equiv(40, And([30, Some(S, 22)]))
-    # GCI attached to 11: 12 ⊓ ∃R.22 ⊑ 11 — names rank under 11
-    b.add_gci(And([12, Some(R, 22)]), 11)
-    # role chain R∘S ⊑ R and transitive T: rule-2 triggers
-    b.role_chains.append(dict(super_role=R, left_role=R, right_role=S))
-    b.transitive_roles.add(T_ROLE)
-    # 50 ≡ 21 ⊓ ∃S.12 : filler definition demanded by the chain when 40
-    # (via ∃R.21) is expanded?  21 primitive → rule 2 checks its def
-    # 60 ≡ 22 ⊓ ∃T.61, 61 ≡ 21 ⊓ ∃T.22: transitive-role filler pair
-    b.add_subclass(61, 21)
-    b.add_equiv(60, And([22, Some(T_ROLE, 61)]))
-    b.add_subclass(70, And([10, Some(T_ROLE, 60)]))  # focus 2, primitive w/ ∃T
-    return b.build(spark)
+def rich_extractions(rich, extract_both):
+    """{path: result} for the in-process and DataFrame extractions."""
+    return extract_both("rich", rich, [40, 70], compute_rf2=True)
 
 
-@pytest.fixture(scope="module")
-def rich_extraction(spark, rich):
-    return compute_subontology(spark, rich, [40, 70], compute_rf2=True)
+def test_rich_v1_v2_properties(spark, rich, rich_extractions):
+    for res in rich_extractions.values():
+        _check_v1_v2(spark, rich, res)
 
 
-def test_rich_v1_v2_properties(spark, rich, rich_extraction):
-    res = rich_extraction
+def _check_v1_v2(spark, rich, res):
     focus = spark.createDataFrame([(40,), (70,)], "concept_id long")
     d1 = verify_focus_equivalence(rich, res.src_cl, res.sub, res.sub_cl, focus)
     assert d1.isEmpty(), d1.collect()
@@ -61,8 +37,12 @@ def test_rich_v1_v2_properties(spark, rich, rich_extraction):
     assert d2.isEmpty(), d2.collect()
 
 
-def test_rich_supporting_definitions(rich_extraction):
-    res = rich_extraction
+def test_rich_supporting_definitions(rich_extractions):
+    for res in rich_extractions.values():
+        _check_supporting_definitions(res)
+
+
+def _check_supporting_definitions(res):
     defined = {r.concept_id for r in res.defined_supporting.collect()}
     # 60 is the transitive-role filler of focus 70's ∃T.60 → rule 2
     assert 60 in defined
@@ -72,8 +52,12 @@ def test_rich_supporting_definitions(rich_extraction):
     assert 30 not in defined
 
 
-def test_rich_triples_sound(spark, rich_extraction):
-    res = rich_extraction
+def test_rich_triples_sound(spark, rich_extractions):
+    for res in rich_extractions.values():
+        _check_triples_sound(spark, res)
+
+
+def _check_triples_sound(spark, res):
     triples = triples_from_nnf(res.nnf_rows, res.prop_defs, res.sub)
     isa = {(r.subj, r.obj) for r in triples.filter(F.col("pred") == IS_A).collect()}
     # IS-A rows must be entailed by the source ontology

@@ -94,3 +94,20 @@ def test_anti_pairs_broadcast_size_gate(spark, monkeypatch, gate):
     # broadcast of the __k key set (the semi-restrict structure).
     plan = capped._jdf.queryExecution().executedPlan().toString()
     assert "__k" not in plan, "cap must suppress the explicit key-set broadcast"
+
+
+def test_strip_stats_private_api_pinned(spark):
+    """Pin the private Catalyst API ``_strip_stats``/``plan_leaf`` rely on
+    (``queryExecution().toRdd()`` + ``internalCreateDataFrame``): called
+    directly, the rewrap must succeed on this Spark build, keep the rows,
+    and leave a single stats-free leaf.  The runtime fallback in ``chk``
+    hides a failure here; this test makes it loud."""
+    import subont.util as u
+
+    df = spark.createDataFrame([(i, i * 2) for i in range(20)], "a long, b long")
+    base = df.groupBy((F.col("a") % 3).alias("k")).agg(F.sum("b").alias("s")).localCheckpoint()
+    out = u._strip_stats(base)  # raises if the private API moved
+    assert out.schema == base.schema
+    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, base.collect()))
+    plan = out._jdf.queryExecution().optimizedPlan()
+    assert plan.children().isEmpty(), plan.toString()  # one leaf, no producing tree

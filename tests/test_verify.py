@@ -12,23 +12,27 @@ from subont.verify import (
 )
 
 
-def test_v1_focus_equivalence(spark, dummy_extraction):
-    ont, res = dummy_extraction
+def test_v1_focus_equivalence(spark, dummy_ont, dummy_extractions):
+    for res in dummy_extractions.values():
+        _v1_focus_equivalence(spark, dummy_ont, res)
+
+
+def _v1_focus_equivalence(spark, ont, res):
     focus = spark.createDataFrame([(fixtures.FOCUS,)], "concept_id long")
     diff = verify_focus_equivalence(ont, res.src_cl, res.sub, res.sub_cl, focus)
     assert diff.isEmpty(), diff.collect()
 
 
-def test_v1_rename_union_oracle(spark, dummy_extraction):
+def test_v1_rename_union_oracle(spark, dummy_ont, dummy_extractions):
     """Slow-path V1 (VerificationChecker.java:35-110): the extracted
     subontology's focus definition, renamed and unioned into the source,
     classifies equivalent to the original focus concept."""
     from subont.verify import verify_focus_equivalence_rename
 
-    ont, res = dummy_extraction
     focus = spark.createDataFrame([(fixtures.FOCUS,)], "concept_id long")
-    fails = verify_focus_equivalence_rename(ont, res.sub, focus)
-    assert fails.isEmpty(), fails.collect()
+    for res in dummy_extractions.values():
+        fails = verify_focus_equivalence_rename(dummy_ont, res.sub, focus)
+        assert fails.isEmpty(), fails.collect()
 
 
 def test_v1_rename_union_detects_corruption(spark, dummy_extraction):
@@ -67,15 +71,23 @@ def test_v1_rename_union_detects_corruption(spark, dummy_extraction):
     assert not fails2.isEmpty(), "oracle must flag a corrupted focus definition"
 
 
-def test_v2_closure_equality(spark, dummy_extraction):
-    ont, res = dummy_extraction
+def test_v2_closure_equality(spark, dummy_ont, dummy_extractions):
+    for res in dummy_extractions.values():
+        _v2_closure_equality(spark, dummy_ont, res)
+
+
+def _v2_closure_equality(spark, ont, res):
     sig = res.sub.class_signature()
     diff = verify_transitive_closure_equal(res.src_cl, res.sub_cl, sig)
     assert diff.isEmpty(), diff.collect()
 
 
-def test_v3_triple_integrity(spark, dummy_extraction):
-    ont, res = dummy_extraction
+def test_v3_triple_integrity(spark, dummy_ont, dummy_extractions):
+    for res in dummy_extractions.values():
+        _v3_triple_integrity(spark, dummy_ont, res)
+
+
+def _v3_triple_integrity(spark, ont, res):
     triples = triples_from_nnf(res.nnf_rows, res.prop_defs, res.sub)
     sig = res.sub.class_signature()
     roles = res.sub.role_signature().unionByName(
