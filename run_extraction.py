@@ -6,9 +6,11 @@
         -output-rf2 -rf2-snapshot-dir snapshot/Terminology \
         -output-path out/ [-verify-subontology]
 
-Differences from the reference, by design: the snapshot is a directory
-of TSVs (no zip handling); verification failures print diff rows and
-exit non-zero instead of writing report files.
+The snapshot is a directory of TSVs or, like the reference
+(SubontologyExtraction.java:72-79), a ``.zip`` release archive, which is
+exploded to a temporary directory first.  Verification failures print
+diff rows, write subOntDiffMap.txt / sourceOntDiffMap.txt and exit
+non-zero.
 """
 
 from __future__ import annotations

@@ -8,13 +8,27 @@ full relationship set the reference emits for subset {362969004} with
 SubontologyExtractionTest.java:56-69 plus the NNF semantics
 (generated relationship ids and group numbers are throw-away per the
 reference README.md:69; comparison is on (subj, pred, obj, group)).
+
+The resource files themselves are read from ``RESOURCES``: the
+hand-written copy under tests/data (provenance in tests/data/README.md),
+or an upstream ``src/test/resources`` named by $SUBONT_REFERENCE_DIR.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import SparkSession
 
 from .model import And, Has, Ontology, OntologyBuilder, Some
+
+RESOURCES = os.environ.get("SUBONT_REFERENCE_DIR") or os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tests", "data"
+)
+DUMMY_OWL = os.path.join(RESOURCES, "dummy-sct-ontology.owl")
+# the directory of snapshot TSVs (the reference's Terminology/ folder)
+DUMMY_SNAPSHOT = os.path.join(RESOURCES, "dummy-sct-snapshot", "Terminology")
+DUMMY_SUBSET = os.path.join(RESOURCES, "subset.txt")
 
 FOCUS = 362969004
 

@@ -1,6 +1,7 @@
 """End-to-end CLI parity (SURVEY.md §3.1): run_extraction.py driven
-in-process against the reference's own fixture files, with a ZIPPED
-snapshot archive (SubontologyExtraction.java:72-79 reads a zip)."""
+in-process against the reference's CI fixture files (tests/data, or an
+upstream src/test/resources named by $SUBONT_REFERENCE_DIR), with a
+ZIPPED snapshot archive (SubontologyExtraction.java:72-79 reads a zip)."""
 
 import glob
 import os
@@ -9,9 +10,9 @@ import zipfile
 
 from subont import fixtures
 
-OWL = "/root/reference/src/test/resources/dummy-sct-ontology.owl"
-SNAP = "/root/reference/src/test/resources/dummy-sct-snapshot/Terminology"
-SUBSET = "/root/reference/src/test/resources/subset.txt"
+OWL = fixtures.DUMMY_OWL
+SNAP = fixtures.DUMMY_SNAPSHOT
+SUBSET = fixtures.DUMMY_SUBSET
 
 
 def test_run_extraction_cli_zip_snapshot(spark, tmp_path, monkeypatch):

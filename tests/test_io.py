@@ -1,6 +1,7 @@
-"""S1-S5 source tests: parse the reference's own public CI fixtures
-(/root/reference/src/test/resources, read-only) and check the decoded
-tables agree with the hand-encoded fixture + expected filters."""
+"""S1-S5 source tests: parse the reference's CI fixture files
+(tests/data, or an upstream src/test/resources named by
+$SUBONT_REFERENCE_DIR — see subont.fixtures.RESOURCES) and check the
+decoded tables agree with the hand-encoded fixture + expected filters."""
 
 import pyspark.sql.functions as F
 import pytest
@@ -16,12 +17,9 @@ from subont.rf2_io import (
     read_rf2_tsv,
 )
 
-OWL = "/root/reference/src/test/resources/dummy-sct-ontology.owl"
-REL = (
-    "/root/reference/src/test/resources/dummy-sct-snapshot/Terminology/"
-    "sct2_Relationship_Snapshot_INT_20180731.txt"
-)
-SUBSET = "/root/reference/src/test/resources/subset.txt"
+OWL = fixtures.DUMMY_OWL
+REL = f"{fixtures.DUMMY_SNAPSHOT}/sct2_Relationship_Snapshot_INT_20180731.txt"
+SUBSET = fixtures.DUMMY_SUBSET
 
 
 def _axiom_set(ont):

@@ -31,12 +31,12 @@ def test_parquet_filter_pushdown_and_pruning(spark):
 
 
 def test_rf2_active_filter_pushdown(spark):
+    from subont import fixtures
     from subont.rf2_io import read_rf2_tsv
 
     rels = read_rf2_tsv(
         spark,
-        "/root/reference/src/test/resources/dummy-sct-snapshot/Terminology/"
-        "sct2_Relationship_Snapshot_INT_20180731.txt",
+        f"{fixtures.DUMMY_SNAPSHOT}/sct2_Relationship_Snapshot_INT_20180731.txt",
     )
     plan = _plan(rels)
     assert "PushedFilters" in plan

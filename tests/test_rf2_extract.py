@@ -16,7 +16,7 @@ from subont.rf2_extract import (
     write_owl_rf2_zip,
 )
 
-SNAP = "/root/reference/src/test/resources/dummy-sct-snapshot/Terminology"
+SNAP = fixtures.DUMMY_SNAPSHOT
 
 
 # ---------------------------------------------------------------------------

@@ -1,6 +1,7 @@
 """S7/S8 sinks end-to-end: signature-filtered RF2 extraction from the
-reference's dummy snapshot + relationship file writing, plus the salted
-join helper."""
+reference's dummy snapshot (tests/data, or an upstream
+src/test/resources named by $SUBONT_REFERENCE_DIR) + relationship file
+writing, plus the salted join helper."""
 
 import glob
 
@@ -16,7 +17,7 @@ from subont.rf2 import (
 from subont.rf2_io import read_rf2_tsv
 from subont.skew import key_skew_profile, salted_join
 
-SNAP = "/root/reference/src/test/resources/dummy-sct-snapshot/Terminology"
+SNAP = fixtures.DUMMY_SNAPSHOT
 
 
 def test_concept_description_extraction_sinks(spark, dummy_extraction, tmp_path):
