@@ -784,11 +784,8 @@ def q_kg_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = synth_corpus(spark, n_files=n, n_concepts=max(KG_NC, n // 20))
     kg = build_kg(spark, src)
     # local-kernel results expose the string-level rows on the result
-    # object itself (so none of the five DataFrame surfaces has to be
-    # built for this query); older-style results carry them on .triples
-    trip_names = getattr(kg, "_subont_local_trip_names", None)
-    if trip_names is None:
-        trip_names = getattr(kg.triples, "_subont_local_trip_names", None)
+    # object itself, so none of the five DataFrame surfaces is built here
+    trip_names = getattr(kg, "trip_names", None)
     if trip_names is not None:
         # local-kernel result: the name joins below are 1:1 (concept_id
         # and role_id are injective on the name dimensions), so the

@@ -64,12 +64,6 @@ def main() -> int:
 
     t0 = time.time()
 
-    def _mark(label: str) -> None:
-        # coarse wall-clock markers for the e2e segments, same switch as
-        # compute_subontology's per-phase markers (SUBONT_PHASE_DEBUG)
-        if os.environ.get("SUBONT_PHASE_DEBUG"):
-            print(f"[mark {time.time() - t0:7.1f}] {label}", flush=True)
-
     spark = get_spark("subont-extraction", cores=args.cores)
     ont = load_functional(spark, args.source_ontology)
     subset = load_subset(spark, args.input_subset)
@@ -91,9 +85,7 @@ def main() -> int:
     else:
         focus = subset.select("concept_id")
 
-    _mark("pre-pipeline")
     res = compute_subontology(spark, ont, focus, compute_rf2=args.output_rf2)
-    _mark("pipeline returned")
 
     os.makedirs(args.output_path, exist_ok=True)
     with open(os.path.join(args.output_path, "subOntology.owl"), "w") as f:
@@ -101,7 +93,6 @@ def main() -> int:
         for line in render_axioms(res.sub) + anno_lines:
             f.write(line + "\n")
 
-    _mark("subOntology.owl written")
     if args.output_rf2:
         # subOntologyNNFs.owl (SubontologyExtraction.java:137): NNF rows
         # rendered as a ⊑-only ontology next to subOntology.owl
@@ -115,7 +106,6 @@ def main() -> int:
             for line in render_axioms(nnf_ont):
                 f.write(line + "\n")
 
-        _mark("subOntologyNNFs.owl written")
         triples = triples_from_nnf(res.nnf_rows, res.prop_defs, res.sub)
         rf2_dir = os.path.join(args.output_path, "RF2", "Snapshot", "Terminology")
         # both relationship files, reference names + shared id sequence
@@ -142,7 +132,6 @@ def main() -> int:
                 rf2_dir,
                 f"sct2_sRefset_OWLExpressionSnapshot_INT_{rf2_date}.txt",
             )
-        _mark("relationship files written")
         # browser RF2 from the subontology's labels/axioms (OWLtoRF2Service)
         write_owl_rf2_zip(res.sub, os.path.join(args.output_path, "debug_OWLRefset.zip"))
         if snapshot_dir:
@@ -152,7 +141,6 @@ def main() -> int:
                 os.path.join(args.output_path, "RF2"), date=rf2_date,
             )
 
-    _mark("debug zip written")
     rc = 0
     if args.verify:
         d1 = verify_focus_equivalence(ont, res.src_cl, res.sub, res.sub_cl, res.focus)

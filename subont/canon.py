@@ -35,44 +35,44 @@ def _chk(df: DataFrame) -> DataFrame:
 _LOCAL_CC_MAX_EDGES = int(os.environ.get("SUBONT_LOCAL_CC_MAX_EDGES", "2000000"))
 
 
-def _local_cc(spark, pdf) -> DataFrame:
-    """Union-find (rank + path halving) over a collected edge list →
-    sorted (id, component=min member) DataFrame, exact twin of the
-    star-contraction output."""
-    import numpy as np
-    import pandas as pd
-
+def _union_find(pairs) -> dict:
+    """node → component root over undirected ``pairs`` (union-find with
+    path halving); every node of a pair is a key."""
     parent: dict = {}
 
     def find(x):
-        r = x
-        while parent[r] != r:
-            parent[r] = parent[parent[r]]
-            r = parent[r]
-        return r
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[ra] = rb
+    return {n: find(n) for n in parent}
+
+
+def _local_cc(spark, pdf) -> DataFrame:
+    """Union-find over a collected edge list → sorted (id,
+    component=min member) DataFrame, exact twin of the star-contraction
+    output."""
+    import numpy as np
+    import pandas as pd
 
     # mirror the distributed path's null handling (the a != b filter
     # silently drops null rows there): without this, null endpoints turn
     # the whole pandas column float64 and crash the sort/min below
     pdf = pdf.dropna()
-    a_col, b_col = pdf.iloc[:, 0].tolist(), pdf.iloc[:, 1].tolist()
-    for a, b in zip(a_col, b_col):
-        if a not in parent:
-            parent[a] = a
-        if b not in parent:
-            parent[b] = b
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[ra] = rb
+    root = _union_find(zip(pdf.iloc[:, 0].tolist(), pdf.iloc[:, 1].tolist()))
     comp_min: dict = {}
-    for n in parent:
-        r = find(n)
+    for n, r in root.items():
         m = comp_min.get(r)
         if m is None or n < m:
             comp_min[r] = n
-    rows = [(n, comp_min[find(n)]) for n in parent]
-    rows = [(n, c) for n, c in rows if n != c]
-    rows.sort()
+    rows = sorted((n, comp_min[r]) for n, r in root.items() if n != comp_min[r])
     if not rows:
         return spark.createDataFrame([], "id bigint, component bigint")
     arr = np.array(rows, dtype=np.int64)

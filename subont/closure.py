@@ -36,8 +36,10 @@ re-classifies from scratch) only closes the delta.
 from __future__ import annotations
 
 import os
+import weakref
 from dataclasses import dataclass, field
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -121,12 +123,13 @@ def _anti_pairs(
 # tests/test_closure.py (randomized DAGs + cycles, both directions forced
 # via SUBONT_LOCAL_TC).
 #
-# Incremental reuse: the returned DataFrame carries the node→ancestors map
-# (``_subont_local_anc``); a seeded call whose seed carries the map stays
-# local, so classify's per-round incremental closures at fixture scale run
-# entirely without shuffles.  A seed WITHOUT the map (i.e. one computed by
-# the distributed path) keeps the whole call distributed — no collect of an
-# unbounded closure ever happens.
+# Incremental reuse: the returned DataFrame carries a ``LocalClosure``
+# (``local_of``); a seeded call whose seed carries one stays local, so
+# classify's per-round incremental closures at fixture scale run entirely
+# without shuffles.  A seed WITHOUT one (i.e. computed by the distributed
+# path) keeps the whole call distributed — no collect of an unbounded
+# closure ever happens.  The kernels pack int64 ids, so the gate engages
+# only for two non-null bigint columns.
 # ---------------------------------------------------------------------------
 
 _LOCAL_TC_MAX_EDGES = int(os.environ.get("SUBONT_LOCAL_TC_MAX_EDGES", "200000"))
@@ -269,41 +272,93 @@ def _close_pairs_np(child, parent, max_pairs: int):
     return d[o], a[o]
 
 
-def _anc_dict_from_pairs(d, a) -> dict:
-    """node → set(strict ancestors) from (desc, anc) arrays sorted by
-    desc — the lazy twin of the dict the python kernel builds eagerly;
-    consumers that need the map (seeded re-closure, direct-edge sweep)
-    pay for it exactly once, and pure closure queries never do."""
-    import numpy as np
+def _anc_to_pairs(anc: dict):
+    """(desc, anc) int64 arrays sorted by (desc, anc) from an int
+    node → set(ancestors) map."""
+    n = sum(len(s) for s in anc.values())
+    d = np.empty(n, np.int64)
+    a = np.empty(n, np.int64)
+    i = 0
+    for k, s in anc.items():
+        m = len(s)
+        d[i : i + m] = k
+        a[i : i + m] = np.fromiter(s, np.int64, m)
+        i += m
+    o = np.lexsort((a, d))
+    return d[o], a[o]
 
-    if len(d) == 0:
-        return {}
-    idx = np.flatnonzero(np.r_[True, d[1:] != d[:-1]])
-    ends = np.r_[idx[1:], len(d)]
-    al = a.tolist()
-    dl = d[idx].tolist()
-    return {dl[k]: set(al[i:j]) for k, (i, j) in enumerate(zip(idx, ends))}
 
+@dataclass(eq=False)
+class LocalClosure:
+    """The in-process closure a shipped closure DataFrame came from
+    (``local_of``): strict (desc, anc) pairs as int64 arrays sorted by
+    (desc, anc), and the witness edges the kernel collected — a weakref
+    to the caller's (child, parent) DataFrame plus its id arrays, so
+    ``derive_direct_edges(closure, edges=<same object>)`` skips its own
+    collect without pinning the caller's plan."""
 
-def _get_local_anc(df: DataFrame | None) -> dict | None:
-    """The closure's node→ancestors map, if it was computed by a local
-    kernel: either attached eagerly (dict paths) or built on first use
-    from the vectorized path's pair arrays (memoized on the DataFrame)."""
-    if df is None:
+    desc: np.ndarray
+    anc: np.ndarray
+    edges: weakref.ref | None = None
+    edge_child: np.ndarray | None = None
+    edge_parent: np.ndarray | None = None
+    memo: dict | None = field(default=None, repr=False)  # anc_map()
+
+    def anc_map(self) -> dict:
+        """node → set(strict ancestors), built on first use: consumers
+        that need the map (seeded re-closure) pay for it exactly once,
+        and pure closure queries never do."""
+        if self.memo is None:
+            d = self.desc
+            starts = np.flatnonzero(np.diff(d, prepend=d[:1] - 1))  # one run per node
+            bounds = np.r_[starts, len(d)].tolist()
+            dl, al = d.tolist(), self.anc.tolist()
+            self.memo = {dl[i]: set(al[i:j]) for i, j in zip(bounds, bounds[1:])}
+        return self.memo
+
+    def get(self, node) -> set | None:
+        """Strict ancestors of ``node``; None when it has none or is not
+        an int.  Before the map is built this is a binary search, so a
+        handful of lookups never pays for the whole map."""
+        if not isinstance(node, (int, np.integer)):
+            return None
+        if self.memo is not None:
+            return self.memo.get(node)
+        i = np.searchsorted(self.desc, node, "left")
+        j = np.searchsorted(self.desc, node, "right")
+        return set(self.anc[i:j].tolist()) if j > i else None
+
+    def witness(self, edges: DataFrame | None):
+        """The collected (child, parent) arrays of ``edges`` when this
+        closure was computed from that very object, else None."""
+        if edges is not None and self.edges is not None and self.edges() is edges:
+            return self.edge_child, self.edge_parent
         return None
-    anc = getattr(df, "_subont_local_anc", None)
-    if anc is None:
-        fn = getattr(df, "_subont_local_anc_fn", None)
-        if fn is not None:
-            anc = fn()
-            df._subont_local_anc = anc
-    return anc
+
+
+# closure DataFrame → its LocalClosure; weak keys, so nothing is ever set
+# on a pyspark object and an entry dies with its DataFrame
+_LOCAL: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _with_local(df: DataFrame, loc: LocalClosure | None) -> DataFrame:
+    if loc is not None:
+        _LOCAL[df] = loc
+    return df
+
+
+def local_of(df: DataFrame | None) -> LocalClosure | None:
+    """The in-process closure ``df`` was shipped from, if any."""
+    return None if df is None else _LOCAL.get(df)
 
 
 def _pairs_to_df(edges_df: DataFrame, d, a, name_a: str, name_b: str) -> DataFrame:
-    """Ship (int64, int64) pair arrays back to Spark — same size-gated
-    parquet/pandas split as ``_local_anc_to_df`` without the dict→array
-    flatten."""
+    """Ship (int64, int64) pair arrays back to Spark as one
+    LocalRelation-backed DataFrame.  Large results go back as a one-file
+    parquet scan instead of a python-parallelized Arrow RDD: every
+    downstream action on the createDataFrame form re-pays a python
+    deserialization pass (~1.3 s/count at 640k rows vs 0.12 s on the
+    scan)."""
     spark = edges_df.sparkSession
     schema = f"{name_a} bigint, {name_b} bigint"
     n = len(d)
@@ -322,49 +377,10 @@ def _pairs_to_df(edges_df: DataFrame, d, a, name_a: str, name_b: str) -> DataFra
 
 
 def _local_anc_to_df(edges_df: DataFrame, anc: dict, name_a: str, name_b: str) -> DataFrame:
-    """One sorted LocalRelation-backed DataFrame from an ancestor map —
-    sorted so fixture outputs stay deterministic run-over-run (the repo's
-    byte-identical-builds invariant); int64 ids go through numpy lexsort
-    + Arrow, everything else through a plain python sort."""
-    spark = edges_df.sparkSession
-    import pandas as pd
-
-    t_child = edges_df.schema[0].dataType.simpleString()
-    t_parent = edges_df.schema[1].dataType.simpleString()
-    schema = f"{name_a} {t_child}, {name_b} {t_parent}"
-    n = sum(len(s) for s in anc.values())
-    if n == 0:
-        return spark.createDataFrame([], schema)
-    if t_child == "bigint" and t_parent == "bigint":
-        import numpy as np
-
-        d = np.empty(n, np.int64)
-        a = np.empty(n, np.int64)
-        i = 0
-        for k, s in anc.items():
-            m = len(s)
-            d[i : i + m] = k
-            a[i : i + m] = np.fromiter(s, np.int64, m)
-            i += m
-        o = np.lexsort((a, d))
-        if n >= _LOCAL_SHIP_PARQUET_MIN:
-            # large results go back as a one-file parquet scan instead of
-            # a python-parallelized Arrow RDD: every downstream action on
-            # the createDataFrame form re-pays a python deserialization
-            # pass (~1.3 s/count at 640k rows vs 0.12 s on the scan)
-            import pyarrow as pa
-
-            from .util import ship_local_table
-
-            tbl = pa.table(
-                {name_a: pa.array(d[o], pa.int64()), name_b: pa.array(a[o], pa.int64())}
-            )
-            return ship_local_table(spark, tbl, schema)
-        pdf = pd.DataFrame({name_a: d[o], name_b: a[o]})
-    else:
-        pairs = sorted((k, v) for k, s in anc.items() for v in s)
-        pdf = pd.DataFrame(pairs, columns=[name_a, name_b])
-    return spark.createDataFrame(pdf, schema=schema)
+    """An int ancestor map shipped sorted, so fixture outputs stay
+    deterministic run-over-run (the repo's byte-identical-builds
+    invariant)."""
+    return _pairs_to_df(edges_df, *_anc_to_pairs(anc), name_a, name_b)
 
 
 def _maybe_local_tc(
@@ -372,65 +388,43 @@ def _maybe_local_tc(
     seed_closure: DataFrame | None,
     return_delta: bool,
     big: bool,
-    edges_in: DataFrame | None = None,
 ) -> DataFrame | tuple[DataFrame, DataFrame] | None:
-    mode = os.environ.get("SUBONT_LOCAL_TC", "auto")
-    if mode == "off" or big:
+    if os.environ.get("SUBONT_LOCAL_TC", "auto") == "off" or big:
         return None
-    seed_anc = _get_local_anc(seed_closure)
-    if seed_closure is not None and seed_anc is None:
+    if {edges.schema[c].dataType.simpleString() for c in ("child", "parent")} != {"bigint"}:
+        return None  # the kernels pack int64 ids; any other key runs the distributed plan
+    seed = local_of(seed_closure)
+    if seed_closure is not None and seed is None:
         return None  # seed came from the distributed path: stay distributed
     # Arrow-batched collect of the (bounded) edge set; duplicates are
-    # deduped in-process by the parent sets, so the caller's plan need
-    # not pay a distinct shuffle first.  Count-gate + full collect
-    # instead of limit(cap+1): the limit form scans in sequential driver
-    # waves (1, 4, 16… partitions) at bench scale and, at production
-    # scale, ships up to cap rows to the driver just to learn the input
-    # is over the gate — the count ships nothing.
+    # deduped in-process, so the caller's plan need not pay a distinct
+    # shuffle first.  Count-gate + full collect instead of
+    # limit(cap+1): the limit form scans in sequential driver waves (1,
+    # 4, 16… partitions) at bench scale and, at production scale, ships
+    # up to cap rows to the driver just to learn the input is over the
+    # gate — the count ships nothing.
     if edges.count() > _LOCAL_TC_MAX_EDGES:
         return None
-    pdf0 = edges.toPandas()
-    if (
-        seed_closure is None
-        and not return_delta
-        and len(pdf0.columns) == 2
-        and str(pdf0.dtypes.iloc[0]) == "int64"
-        and str(pdf0.dtypes.iloc[1]) == "int64"
-    ):
-        # unseeded int64 edges (no nulls — those surface as float64 /
-        # object dtype): fully vectorized closure, pairs shipped straight
+    pdf0 = edges.select("child", "parent").toPandas()
+    if any(str(t) != "int64" for t in pdf0.dtypes):
+        return None  # a null id (float64 / object column): distributed plan
+    child = pdf0["child"].to_numpy(np.int64)
+    parent = pdf0["parent"].to_numpy(np.int64)
+    wit = dict(edges=weakref.ref(edges), edge_child=child, edge_parent=parent)
+    if seed is None and not return_delta:
+        # unseeded: fully vectorized closure, pairs shipped straight
         # from the sorted arrays, anc map built lazily on first use
-        import numpy as np
-
-        res = _close_pairs_np(
-            pdf0.iloc[:, 0].to_numpy(np.int64),
-            pdf0.iloc[:, 1].to_numpy(np.int64),
-            _LOCAL_TC_MAX_PAIRS,
-        )
+        res = _close_pairs_np(child, parent, _LOCAL_TC_MAX_PAIRS)
         if res is None:
             return None  # over the pairs cap: distributed plan
-        d_arr, a_arr = res
-        out = _pairs_to_df(edges, d_arr, a_arr, "desc", "anc")
-        out._subont_local_anc_arrays = (d_arr, a_arr)
-        out._subont_local_anc_fn = lambda da=d_arr, aa=a_arr: _anc_dict_from_pairs(da, aa)
-        if edges_in is not None:
-            # stash the ALREADY-COLLECTED edge arrays keyed by the
-            # caller's DataFrame object: derive_direct_edges(closure,
-            # edges=<same object>) then skips its own witness collect —
-            # a third evaluation of the edge plan in the closure+direct
-            # query shape (identity-checked, so a different witness
-            # relation never reuses these rows)
-            out._subont_local_src_edges = (
-                edges_in,
-                pdf0.iloc[:, 0].to_numpy(np.int64),
-                pdf0.iloc[:, 1].to_numpy(np.int64),
-            )
-        return out
-    col_c, col_p = pdf0.iloc[:, 0].tolist(), pdf0.iloc[:, 1].tolist()
+        loc = LocalClosure(*res, **wit)
+        return _with_local(_pairs_to_df(edges, loc.desc, loc.anc, "desc", "anc"), loc)
+    col_c, col_p = child.tolist(), parent.tolist()
     parents: dict = {}
     for c, p in zip(col_c, col_p):
         if c != p:
             parents.setdefault(c, set()).add(p)
+    seed_anc = seed.anc_map() if seed is not None else None
     if seed_anc:
         for d, s in seed_anc.items():
             tgt = parents.get(d)
@@ -441,8 +435,8 @@ def _maybe_local_tc(
     anc = _local_close(parents, _LOCAL_TC_MAX_PAIRS)
     if anc is None:
         return None
-    out = _local_anc_to_df(edges, anc, "desc", "anc")
-    out._subont_local_anc = anc
+    loc = LocalClosure(*_anc_to_pairs(anc), **wit, memo=anc)
+    out = _with_local(_pairs_to_df(edges, loc.desc, loc.anc, "desc", "anc"), loc)
     if not return_delta:
         return out
     if seed_anc:
@@ -481,15 +475,13 @@ def transitive_closure(
     true delta is fine for its consumer, the semi-naive rule evaluation
     in classify, which only uses it to bound candidate generation).
     """
-    edges_in = edges
-    edges = edges.select(F.col("child").alias("desc"), F.col("parent").alias("anc"))
-    # local probe runs on the UN-deduped select (dedup happens in the
-    # in-process parent sets) so the small-input path never pays the
+    # local probe runs on the UN-deduped edges (dedup happens in the
+    # in-process kernel) so the small-input path never pays the
     # distinct shuffle; the distributed path dedups as before
-    local = _maybe_local_tc(edges, seed_closure, return_delta, big, edges_in=edges_in)
+    local = _maybe_local_tc(edges, seed_closure, return_delta, big)
     if local is not None:
         return local
-    edges = edges.distinct()
+    edges = edges.select(F.col("child").alias("desc"), F.col("parent").alias("anc")).distinct()
     if seed_closure is not None:
         base = seed_closure.select("desc", "anc").unionByName(edges).distinct()
     else:
@@ -593,36 +585,27 @@ def transitive_closure(
     return out
 
 
-def _local_direct_np(
-    closure_df: DataFrame,
-    d_arr,
-    a_arr,
-    edges_df: DataFrame | None,
-    edge_arrays=None,
-):
-    """Vectorized twin of ``_local_direct`` for array-backed closures
-    (the unseeded vectorized-TC output): the witness sweep runs as a
-    searchsorted gather + packed-key setdiff in numpy C kernels instead
-    of a python dict-of-sets build (~0.4 s) + per-mark set.add loop
-    (~1-2 s at the 640k-pair bench closure).  Same 20M-mark work cap,
-    same strict-closure semantics, byte-identical (child, parent)
-    ordering.  Returns None → caller falls back (dict path or
-    distributed plan)."""
-    import numpy as np
+def _local_direct_np(closure_df: DataFrame, loc: LocalClosure, edges_df: DataFrame | None):
+    """In-process witness-form direct edges for a closure with a
+    ``LocalClosure``: a searchsorted gather + packed-key setdiff in
+    numpy C kernels instead of a python dict-of-sets build (~0.4 s) +
+    per-mark set.add loop (~1-2 s at the 640k-pair bench closure).
+    Work-capped at 20M marks, strict-closure semantics, sorted
+    (child, parent) output.  None → caller runs the distributed plan."""
     import pandas as pd
 
-    if edge_arrays is not None:
-        ec, ep = edge_arrays  # witness rows already collected by the TC probe
+    d_arr, a_arr = loc.desc, loc.anc
+    wit = loc.witness(edges_df)
+    if wit is not None:
+        ec, ep = wit  # witness rows already collected by the TC probe
     elif edges_df is not None:
-        pdf = edges_df.limit(_LOCAL_TC_MAX_EDGES + 1).toPandas()
+        pdf = edges_df.select("child", "parent").limit(_LOCAL_TC_MAX_EDGES + 1).toPandas()
         if len(pdf) > _LOCAL_TC_MAX_EDGES:
             return None
-        if len(pdf.columns) != 2 or not all(
-            str(t) == "int64" for t in pdf.dtypes
-        ):
-            return None  # nulls / non-int ids: use the dict or distributed path
-        ec = pdf.iloc[:, 0].to_numpy(np.int64)
-        ep = pdf.iloc[:, 1].to_numpy(np.int64)
+        if not all(str(t) == "int64" for t in pdf.dtypes):
+            return None  # nulls / non-int ids: distributed plan
+        ec = pdf["child"].to_numpy(np.int64)
+        ep = pdf["parent"].to_numpy(np.int64)
     else:
         ec, ep = d_arr, a_arr  # the closure is its own last-hop witness set
     nd = len(d_arr)
@@ -658,9 +641,8 @@ def _local_direct_np(
         keep = nond[pos] != clo_keys
     else:
         keep = np.ones(nd, bool)
-    d_out, a_out = d_arr[keep], a_arr[keep]
-    o2 = np.lexsort((a_out, d_out))
-    return _pairs_to_df(closure_df, d_out[o2], a_out[o2], "child", "parent")
+    # the carrier's pairs are sorted by (desc, anc), so the kept subset is too
+    return _pairs_to_df(closure_df, d_arr[keep], a_arr[keep], "child", "parent")
 
 
 def _direct_map(anc: dict, elist) -> dict | None:
@@ -690,24 +672,6 @@ def _direct_map(anc: dict, elist) -> dict | None:
     return out_map
 
 
-def _local_direct(closure_df: DataFrame, anc: dict, edges_df: DataFrame | None):
-    """In-process witness-form direct-edge derivation for a closure that
-    carries the local ancestor map.  Work-capped: returns None (caller
-    falls back to the distributed plan) when the witness sweep would
-    exceed ~20M in-process marks."""
-    if edges_df is not None:
-        pdf = edges_df.limit(_LOCAL_TC_MAX_EDGES + 1).toPandas()
-        if len(pdf) > _LOCAL_TC_MAX_EDGES:
-            return None
-        elist = list(zip(pdf.iloc[:, 0].tolist(), pdf.iloc[:, 1].tolist()))
-    else:
-        elist = [(d, a) for d, s in anc.items() for a in s]
-    out_map = _direct_map(anc, elist)
-    if out_map is None:
-        return None
-    return _local_anc_to_df(closure_df, out_map, "child", "parent")
-
-
 def derive_direct_edges(closure: DataFrame, edges: DataFrame | None = None) -> DataFrame:
     """Direct ('told+inferred nearest') edges from a strict closure.
 
@@ -719,23 +683,11 @@ def derive_direct_edges(closure: DataFrame, edges: DataFrame | None = None) -> D
     last-hop edge witness) — linear in |edges| instead of the
     closure ⋈ closure square, and far lighter on hub-ancestor skew.
     """
-    if os.environ.get("SUBONT_LOCAL_TC", "auto") != "off":
-        arrs = getattr(closure, "_subont_local_anc_arrays", None)
-        if arrs is not None:
-            src = getattr(closure, "_subont_local_src_edges", None)
-            edge_arrays = (
-                (src[1], src[2])
-                if src is not None and edges is not None and src[0] is edges
-                else None
-            )
-            out = _local_direct_np(closure, arrs[0], arrs[1], edges, edge_arrays)
-            if out is not None:
-                return out
-        anc_map = _get_local_anc(closure)
-        if anc_map is not None:
-            out = _local_direct(closure, anc_map, edges)
-            if out is not None:
-                return out
+    loc = local_of(closure)
+    if loc is not None and os.environ.get("SUBONT_LOCAL_TC", "auto") != "off":
+        out = _local_direct_np(closure, loc, edges)
+        if out is not None:
+            return out
     if edges is not None:
         b = edges.select(F.col("child").alias("b_desc"), F.col("parent").alias("b_anc"))
     else:
@@ -1205,14 +1157,15 @@ def _classify_tables(
 def ship_classified(loc: LocalClassified) -> "Classified":
     """The ``Classified`` surfaces of an in-process classification, as
     LocalRelations (parquet scans above the ship threshold) — zero jobs.
-    The closure keeps its ancestor map for the local reduce kernels."""
+    The closure carries a ``LocalClosure`` with the engine's ancestor
+    map preset, for the local reduce / direct-edge kernels."""
     ont = loc.ont
     spark = ont.axioms.sparkSession
     tmpl = ont.axioms.select(
         F.col("sub_id").alias("child"), F.col("sub_id").alias("parent")
     )
-    closure_df = _local_anc_to_df(tmpl, loc.anc, "desc", "anc")
-    closure_df._subont_local_anc = loc.anc
+    clo = LocalClosure(*_anc_to_pairs(loc.anc), memo=loc.anc)
+    closure_df = _with_local(_pairs_to_df(tmpl, clo.desc, clo.anc, "desc", "anc"), clo)
     gen_map: dict = {}
     for c, p in loc.gen:
         gen_map.setdefault(c, set()).add(p)
@@ -1567,32 +1520,6 @@ def classify(
         closure.count() if (have_chains and not naive) else 0
     )
 
-    def _round_partition(clo: DataFrame) -> DataFrame:
-        """ONE exchange per classify round (VERDICT r4 item 5): above the
-        big-closure threshold, hash-partition the round's closure on
-        ``desc`` — the probe key at every rule site (_covered_pairs'
-        sub_match, R-equiv's left side, all three chain-rule hops) — and
-        checkpoint.  localCheckpoint preserves output partitioning, so
-        each desc-keyed join reuses this single shuffle instead of
-        re-exchanging the multi-10M-row closure per site.  Below the
-        threshold the lazy-union closure is kept (fixture scale: an
-        extra shuffle job would cost more than it saves)."""
-        if naive or n_closure_est < DELTA_FIRST_MIN_CLOSURE:
-            return clo
-        # MEASURED NET LOSS, default off (BENCH.md round-5 A/B: 360k
-        # classify 876.7 s with vs 815.8 s without, same window): within
-        # one round every rule site feeds a single action, so Spark's
-        # ReuseExchange/AQE stage reuse already dedupes the identical
-        # closure exchanges — the explicit repartition only adds a
-        # 63M-row shuffle + checkpoint per round (and the >256-bit
-        # stats-strip rewrap discards the partitioning it tried to pin).
-        # Kept behind the env knob for re-evaluation on a real cluster,
-        # where exchange reuse across AQE stage boundaries is weaker.
-        if os.environ.get("SUBONT_ROUND_REPARTITION", "off") != "on":
-            return clo
-        return _chk(clo.repartition(F.col("desc")))
-
-    closure = _round_partition(closure)
     # closure growth is tracked UNCONDITIONALLY via each round's n_new
     # (already counted for free by _chk_n), so a classification whose
     # initial TC is below DELTA_FIRST_MIN_CLOSURE but grows past it
@@ -1707,10 +1634,10 @@ def classify(
                     new_edges_parts.append(_chain_rule_delta(closure, rule_delta))
                 elif n_delta is not None and n_delta * _NAIVE_ROUND_RATIO >= n_closure_est:
                     # Δ ≈ closure (the first post-seed round at scale):
-                    # the tagged union skips almost nothing AND destroys
-                    # the pre-partitioned closure's exchange reuse — full
-                    # re-evaluation over the single-exchange closure is
-                    # cheaper; _anti_pairs drops the re-derived old pairs
+                    # the tagged union skips almost nothing AND defeats
+                    # the closure's exchange reuse — full re-evaluation
+                    # over one shared closure exchange is cheaper;
+                    # _anti_pairs drops the re-derived old pairs
                     new_edges_parts.append(_chain_rule(closure, tagged=False))
                 else:
                     # closure == prev_closure ⊎ rule_delta (every delta
@@ -1766,7 +1693,6 @@ def classify(
             return_delta=True,
             big=n_closure_est >= DELTA_FIRST_MIN_CLOSURE,
         )
-        closure = _round_partition(closure)
     else:
         raise RuntimeError("classify: rule fixpoint did not converge")
 
@@ -1784,22 +1710,13 @@ def classify(
         if progress:
             print(f"classify cycle check: {_time.time() - _t_cyc:.1f}s", flush=True)
 
-    _local_attrs = {
-        k: getattr(closure, k)
-        for k in ("_subont_local_anc", "_subont_local_anc_arrays", "_subont_local_anc_fn")
-        if getattr(closure, k, None) is not None
-    }
     # _chk, not a raw localCheckpoint: in SUBONT_CHECKPOINT_DIR mode the
     # classification's OUTPUT surfaces must be durable too — a reliable
     # fixpoint whose final checkpoint is executor-memory-local would
-    # still die with the executor
-    closure = _chk(closure)
-    # the checkpoint rewraps the same rows; keep the local ancestor
-    # map (eager dict or the vectorized path's lazy arrays) rideable so
-    # downstream consumers (reduce kernels, D4 map, incremental
-    # re-classify) stay on their local fast paths
-    for k, v in _local_attrs.items():
-        setattr(closure, k, v)
+    # still die with the executor.  The checkpoint rewraps the same rows,
+    # so the local closure carries over (reduce kernels, D4 map,
+    # incremental re-classify stay on their local fast paths).
+    closure = _with_local(_chk(closure), local_of(closure))
     gen_edges = gen_parts[0]
     for p in gen_parts[1:]:
         gen_edges = gen_edges.unionByName(p)

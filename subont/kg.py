@@ -68,7 +68,7 @@ _LOCAL_KG_MAX_STMTS = int(os.environ.get("SUBONT_LOCAL_KG_MAX_STMTS", "300000"))
 class _LazyKGResult:
     """Attribute-compatible KGResult twin whose DataFrame surfaces are
     built on FIRST ACCESS.  The headline consumer (q_kg_corpus) reads
-    only the string-level triple rows (``_subont_local_trip_names``), so
+    only the string-level triple rows (``trip_names``), so
     the other surfaces' plan construction — ~470 py4j round-trips +
     createDataFrame/parquet shipping, ~0.2 s measured at bench scale —
     runs only for consumers that actually touch them (guide §1.2: don't
@@ -76,7 +76,7 @@ class _LazyKGResult:
 
     def __init__(self, thunks: dict, trip_names: list):
         self._thunks = thunks
-        self._subont_local_trip_names = trip_names
+        self.trip_names = trip_names
 
     def __getattr__(self, name: str):
         thunks = self.__dict__["_thunks"]
@@ -96,7 +96,9 @@ def _local_kg(spark: SparkSession, pdf):
     import numpy as np
     import pandas as pd
 
-    from .closure import _LOCAL_TC_MAX_PAIRS, _local_close
+    from .canon import _union_find
+    from .closure import _LOCAL_TC_MAX_PAIRS, _direct_map, _local_close
+    from .reduce import reduce_sets
     from .util import ship_local_table
 
     stype_s = pdf["stype"]
@@ -111,29 +113,15 @@ def _local_kg(spark: SparkSession, pdf):
     )
     roots_s = ents_s.str.replace(r"^(C\d+)_a\d+$", r"\1", regex=True)
     roots = dict(zip(ents_s, roots_s))
-    uf: dict = {}
-
-    def find(x):
-        r = x
-        while uf[r] != r:
-            uf[r] = uf[uf[r]]
-            r = uf[r]
-        return r
-
     same_mask = stype_np == "same"
-    for a, b in zip(pdf["arg1"].to_numpy()[same_mask], pdf["arg2"].to_numpy()[same_mask]):
-        ra, rb = roots[a], roots[b]
-        if ra != rb:
-            if ra not in uf:
-                uf[ra] = ra
-            if rb not in uf:
-                uf[rb] = rb
-            fa, fb = find(ra), find(rb)
-            if fa != fb:
-                uf[fa] = fb
+    comp = _union_find(
+        (roots[a], roots[b])
+        for a, b in zip(pdf["arg1"].to_numpy()[same_mask], pdf["arg2"].to_numpy()[same_mask])
+        if roots[a] != roots[b]
+    )
     comp_members: dict = {}
     for e, r in zip(ents_s, roots_s):
-        c = find(r) if r in uf else r
+        c = comp.get(r, r)
         comp_members.setdefault(c, []).append(e)
     cmap: dict = {}
     for ms in comp_members.values():
@@ -160,23 +148,9 @@ def _local_kg(spark: SparkSession, pdf):
         return None
 
     # --- direct (non-redundant) edges: witness sweep over stated edges ---
-    desc: dict = {}
-    for d, s in anc.items():
-        for a in s:
-            desc.setdefault(a, []).append(d)
-    nond: set = set()
-    work = 0
-    for m, ps in parents.items():
-        ds = desc.get(m)
-        if not ds:
-            continue
-        for p in ps:
-            work += len(ds)
-            if work > 20_000_000:
-                return None
-            for d in ds:
-                nond.add((d, p))
-    direct = [(d, a) for d, s in anc.items() for a in s if (d, a) not in nond]
+    direct = _direct_map(anc, ((a, b) for a, ps in parents.items() for b in ps))
+    if direct is None:
+        return None
 
     # --- attribute triples, most-specific filler per (subj, role) ---
     # a role-less attr() reads back as None or NaN; distinct NaN objects
@@ -195,22 +169,12 @@ def _local_kg(spark: SparkSession, pdf):
         attr_pdf["a"].to_numpy(), attr_pdf["r"].to_numpy(), attr_pdf["b"].to_numpy()
     ):
         by_sr.setdefault((a, r), set()).add(b)
-    attr_reduced = []
-    for (a, r), fillers in by_sr.items():
-        # weak = fillers having a strict descendant in the same set
-        # (anc is strict, so a filler never marks itself)
-        weak = set()
-        for g in fillers:
-            ups = anc.get(g)
-            if ups:
-                weak |= ups & fillers
-        for b in fillers:
-            if b not in weak:
-                attr_reduced.append((a, r, b))
+    # keep each set's most specific fillers (eliminate_weaker in memory)
+    attr_reduced = [(a, r, b) for (a, r), kept in reduce_sets(by_sr, anc).items() for b in kept]
 
     # tuple sort is None-safe here: 'attr' < 'isa' decides first, and
     # role is None only within the isa group (compared equal, skipped)
-    trip_rows = [("isa", d, None, a) for d, a in direct] + [
+    trip_rows = [("isa", d, None, a) for d, s in direct.items() for a in s] + [
         ("attr", a, r, b) for a, r, b in attr_reduced
     ]
 
@@ -283,10 +247,6 @@ def _local_kg(spark: SparkSession, pdf):
             entity_id(F.col("obj_ent")).alias("obj"),
             F.lit(0).alias("rel_group"),
         )
-        # string-level triple rows for consumers that only need names
-        # (the id joins are 1:1, so name assembly from these rows is
-        # exact) — also exposed on the result object itself
-        triples._subont_local_trip_names = trip_rows
         return triples
 
     return _LazyKGResult(
@@ -301,7 +261,9 @@ def _local_kg(spark: SparkSession, pdf):
     )
 
 
-def build_kg(spark: SparkSession, src: DataFrame, min_score: float = 0.5) -> KGResult:
+def build_kg(
+    spark: SparkSession, src: DataFrame, min_score: float = 0.5
+) -> KGResult | _LazyKGResult:
     # one materialization, not three: the extraction scan (the python
     # stage) is materialized once; the canonical map is broadcast-sized;
     # the canonicalized view is two broadcast joins over the stored

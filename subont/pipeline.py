@@ -190,25 +190,7 @@ def _expansion_loop(
     # every definition-generator call)
     have_gcis = ont.has_gcis()
 
-    # per-round instrumentation (VERDICT r4 item 8: separate host noise
-    # from real plan nondeterminism in the expansion loop): frontier /
-    # generated / newly-defined counts, driver job counter delta, wall
-    import os as _os
-    import time as _time
-
-    _dbg = bool(_os.environ.get("SUBONT_PHASE_DEBUG"))
-
-    def _job_counter() -> int:
-        try:
-            # py4j converts the AtomicInteger accessor's value to a plain
-            # int on this Spark/py4j build (verified live: returns int)
-            return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
-        except Exception:
-            return -1
-
     for _round_i in range(max_rounds):
-        _t_round = _time.time()
-        _jobs0 = _job_counter() if _dbg else 0
         if n_frontier == 0:
             break
         pvf = frontier.join(cur_pvs, frontier.id == cur_pvs.pv_id, "inner")
@@ -306,16 +288,8 @@ def _expansion_loop(
             nxt = spark.createDataFrame([], "id long")
 
         nxt = nxt.unionByName(complex_members).distinct().join(checked, "id", "left_anti")
-        _n_prev_frontier = n_frontier
         frontier, n_frontier = _chk_n(nxt)
         checked = checked.unionByName(frontier)  # lazy union of checkpointed deltas
-        if _dbg:
-            print(
-                f"[expansion round {_round_i + 1}] frontier={_n_prev_frontier} "
-                f"gen={n_gen} newly={n_newly} next={n_frontier} "
-                f"jobs={_job_counter() - _jobs0} dt={_time.time() - _t_round:.1f}s",
-                flush=True,
-            )
     else:
         raise RuntimeError("expansion loop did not converge")
 
@@ -702,31 +676,6 @@ def compute_subontology(
     object (``src_cl.local``), the extraction runs in-process
     (``pipeline_local``); ``dataclasses.replace(src_cl, local=None)``
     forces the DataFrame pipeline below."""
-    import os as _os
-    import time as _t
-
-    _t0 = _t.time()
-    _dbg = bool(_os.environ.get("SUBONT_PHASE_DEBUG"))
-
-    def _jobs() -> int:
-        try:
-            # py4j converts the value to a plain int (verified live)
-            return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
-        except Exception:
-            return -1
-
-    _j0 = _jobs() if _dbg else 0
-
-    def _phase(name: str) -> None:
-        nonlocal _j0
-        if _dbg:
-            j = _jobs()
-            print(
-                f"[phase {_t.time() - _t0:7.1f}s jobs+{j - _j0:4d}] {name}",
-                flush=True,
-            )
-            _j0 = j
-
     options = options or RedundancyOptions()
     # P1: reify + classify source (done by caller via model tables here)
     src_cl = src_cl or classify(ont)
@@ -746,7 +695,6 @@ def compute_subontology(
         focus = focus.unionByName(lit_concept_df(spark, BROWSER_RF2_METADATA)).distinct()
     focus = _chk(focus)
 
-    _phase("P2 focus definitions")
     # P2: focus authoring definitions
     fdefs = abstract_definitions(ont, src_cl, focus.withColumnRenamed("concept_id", "sub_id"), options)
     focus_axioms = defs_to_axioms(fdefs.rows)
@@ -779,7 +727,6 @@ def compute_subontology(
     focus_axioms = _chk(focus_axioms)
     focus_axiom_ids = focus_axioms.select("axiom_id").distinct()
 
-    _phase("P4-P7 expansion loop")
     # P4-P7: expansion
     sup_axioms, defined_supporting, exp_new_pvs = _expansion_loop(
         spark, ont, src_cl, focus, focus_axioms, options, all_new_pvs
@@ -789,13 +736,11 @@ def compute_subontology(
     work_pvs = ont.pvs.unionByName(all_new_pvs).distinct()
     work_ont = replace(ont, axioms=sub_axioms, pvs=work_pvs, subprops=ont.subprops.limit(0))
 
-    _phase("P8 rbox")
     # P8: RBox
     sig_roles = work_ont.role_signature()
     rbox_edges = _chk(_populate_rbox(ont, sig_roles))
     work_ont = replace(work_ont, subprops=rbox_edges)
 
-    _phase("P9 groupers")
     # P9: groupers
     sub_signature = _chk(work_ont.class_signature())
     groupers_df = _chk(_grouper_concepts(ont, src_cl, sub_signature))
@@ -816,11 +761,9 @@ def compute_subontology(
         ).distinct()
     )
 
-    _phase("classify subontology")
     # classify subontology (P10 precondition)
     sub_cl = classify(work_ont)
 
-    _phase("P10 closure completion")
     # P10: transitive-closure completion
     sub_signature = _chk(work_ont.class_signature())
     partials = (
@@ -840,7 +783,6 @@ def compute_subontology(
     # (monotone EL; the rules still run to their fixpoint on top)
     sub_cl = classify(work_ont, seed=sub_cl)
 
-    _phase("P11 shrink")
     # P11: shrink
     shrunk = _shrink_hierarchy(
         spark, sub_axioms, work_ont, sub_cl, focus, groupers_all, focus_axiom_ids
@@ -860,7 +802,6 @@ def compute_subontology(
     )
     prop_defs = property_definitions(work_ont, sig_props)
 
-    _phase("NNF + P12 tail")
     # P12: annotation transfer + Focus/Supporting tags
     # (SubOntologyExtractionHandler.java:725-760): copy every source
     # annotation whose entity is in the sub∪NNF signature, then tag each

@@ -30,8 +30,10 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Local kernel gate: when the closure was computed by the local TC fast
-# path (it carries the node→ancestors map), the weak/strong member set
+from .closure import local_of
+
+# Local kernel gate: when the closure was computed by a local kernel
+# (``closure.local_of`` finds its LocalClosure), the weak/strong member set
 # is computed in-process from one bounded collect of cand's (set, cls)
 # projection and anti-joined back as a BROADCAST — no member-pair
 # self-join, no closure shuffle.  Above the cap (or with a distributed
@@ -44,15 +46,17 @@ _LOCAL_REDUCE_MAX_ROWS = int(os.environ.get("SUBONT_LOCAL_REDUCE_MAX_ROWS", "300
 # (no second distributed scan + anti-join); it only engages when every
 # cand column round-trips losslessly through pandas
 _LOCAL_REDUCE_ATOMIC = {"bigint", "int", "smallint", "tinyint", "string", "double", "float", "boolean"}
+_LOCAL_REDUCE_INTEGRAL = {"bigint", "int", "smallint", "tinyint"}
 
 
 def marked_members(by_set: dict, anc, weak: bool = True) -> set:
     """(set, member) pairs the antichain drops, over in-memory sets.
 
     ``by_set``: set key → member set; ``anc``: node → strict ancestor set
-    (anything with ``.get``).  weak=True marks members with a strict
-    descendant in their set (eliminate_weaker), weak=False members with
-    a strict ancestor in their set (eliminate_stronger)."""
+    (a dict or a ``closure.LocalClosure`` — anything with ``.get``).
+    weak=True marks members with a strict descendant in their set
+    (eliminate_weaker), weak=False members with a strict ancestor in
+    their set (eliminate_stronger)."""
     marked = set()
     for s, members in by_set.items():
         for o in members:
@@ -82,19 +86,20 @@ def _local_reduce(
     cand: DataFrame, closure: DataFrame, set_col: str, cls_col: str, weak: bool
 ):
     """(reduced DataFrame, ok) — in-process twin of the pairs-first
-    plan when the closure carries the local ancestor map: collect the
+    plan when the closure carries a ``LocalClosure``: collect the
     (bounded) cand rows, mark weak (has a strict descendant in the set)
     or strong (has a strict ancestor in the set) members, filter the
-    rows in-process and ship the survivors back — the previous
-    half-local form still paid a second distributed cand scan for the
-    broadcast anti-join.  ok=False → caller must use the distributed
-    plan."""
-    anc = getattr(closure, "_subont_local_anc", None)
-    arrs = getattr(closure, "_subont_local_anc_arrays", None)
-    if (anc is None and arrs is None) or os.environ.get("SUBONT_LOCAL_REDUCE", "auto") == "off":
+    rows in-process and ship the survivors back.  Member lookups are a
+    few binary searches in the closure's pair arrays, never a full
+    node→ancestors build for a handful of candidates.  ok=False →
+    caller must use the distributed plan."""
+    loc = local_of(closure)
+    if loc is None or os.environ.get("SUBONT_LOCAL_REDUCE", "auto") == "off":
         return None, False
     if any(f.dataType.simpleString() not in _LOCAL_REDUCE_ATOMIC for f in cand.schema.fields):
         return None, False
+    if cand.schema[cls_col].dataType.simpleString() not in _LOCAL_REDUCE_INTEGRAL:
+        return None, False  # Spark compares a non-int member to the ids by cast
     pdf = cand.limit(_LOCAL_REDUCE_MAX_ROWS + 1).toPandas()
     if len(pdf) > _LOCAL_REDUCE_MAX_ROWS:
         return None, False
@@ -102,31 +107,10 @@ def _local_reduce(
         return None, False  # null round-trip risk: use the distributed plan
     sets = pdf[set_col].tolist()
     clss = pdf[cls_col].tolist()
-    if anc is None:
-        # vectorized-TC closure: look members up in the sorted pair
-        # arrays directly (a few binary searches) instead of building
-        # the full node→ancestors dict for a handful of candidates
-        import numpy as np
-
-        if all(isinstance(c, int) for c in clss):
-            d_arr, a_arr = arrs
-
-            class _ArrAnc:
-                @staticmethod
-                def get(o):
-                    i = np.searchsorted(d_arr, o, "left")
-                    j = np.searchsorted(d_arr, o, "right")
-                    return set(a_arr[i:j].tolist()) if j > i else None
-
-            anc = _ArrAnc
-        else:
-            from .closure import _get_local_anc
-
-            anc = _get_local_anc(closure)
     by_set: dict = {}
     for s, c in zip(sets, clss):
         by_set.setdefault(s, set()).add(c)
-    marked = marked_members(by_set, anc, weak)
+    marked = marked_members(by_set, loc, weak)
     spark = cand.sparkSession
     if marked:
         keep = [(s, c) not in marked for s, c in zip(sets, clss)]

@@ -323,7 +323,7 @@ def _tc_both_paths(spark, monkeypatch, edge_rows, seed_rows=None):
     loc_df = transitive_closure(edges, seed_closure=seed)
     if seed is None:
         # unseeded small input must actually take the local path
-        assert C._get_local_anc(loc_df) is not None
+        assert C.local_of(loc_df) is not None
     return dist, _pairs(loc_df)
 
 
@@ -354,10 +354,10 @@ def test_local_tc_seeded_handoff_and_delta(spark, monkeypatch):
     monkeypatch.setenv("SUBONT_LOCAL_TC", "auto")
     e1 = spark.createDataFrame([(1, 2), (2, 3)], "child long, parent long")
     clo1 = transitive_closure(e1)
-    assert C._get_local_anc(clo1)
+    assert C.local_of(clo1).anc_map()
     e2 = spark.createDataFrame([(3, 4)], "child long, parent long")
     clo2, delta = transitive_closure(e2, seed_closure=clo1, return_delta=True)
-    assert C._get_local_anc(clo2)
+    assert C.local_of(clo2).anc_map()
     want = {(1, 2), (1, 3), (2, 3), (1, 4), (2, 4), (3, 4)}
     assert _pairs(clo2) == want
     dpairs = _pairs(delta)
@@ -367,7 +367,7 @@ def test_local_tc_seeded_handoff_and_delta(spark, monkeypatch):
     clo1d = transitive_closure(e1)
     monkeypatch.setenv("SUBONT_LOCAL_TC", "auto")
     clo2d = transitive_closure(e2, seed_closure=clo1d)
-    assert C._get_local_anc(clo2d) is None
+    assert C.local_of(clo2d) is None
     assert _pairs(clo2d) == want
 
 
@@ -377,7 +377,7 @@ def test_local_tc_pairs_cap_falls_back(spark, monkeypatch):
     monkeypatch.setattr(C, "_LOCAL_TC_MAX_PAIRS", 3)
     edges = spark.createDataFrame([(i, i + 1) for i in range(1, 8)], "child long, parent long")
     clo = transitive_closure(edges)
-    assert C._get_local_anc(clo) is None  # fell back
+    assert C.local_of(clo) is None  # fell back
     assert len(_pairs(clo)) == 7 * 8 // 2
 
 
@@ -393,8 +393,8 @@ def test_classify_local_equals_distributed(spark, monkeypatch):
 
 
 def test_reduce_local_equals_distributed(spark, monkeypatch):
-    """eliminate_weaker/stronger local kernels (closure carrying the
-    local anc map) must equal the pairs-first distributed plan on
+    """eliminate_weaker/stronger local kernels (closure carrying a
+    LocalClosure) must equal the pairs-first distributed plan on
     randomized grouped candidate sets."""
     import random
 
@@ -411,7 +411,7 @@ def test_reduce_local_equals_distributed(spark, monkeypatch):
         clo_d = transitive_closure(edges)
         monkeypatch.setenv("SUBONT_LOCAL_TC", "auto")
         clo_l = transitive_closure(edges)
-        assert C._get_local_anc(clo_l) is not None
+        assert C.local_of(clo_l) is not None
         for fn in (eliminate_weaker, eliminate_stronger):
             dist = {(r.set_id, r.cls) for r in fn(cand, clo_d).collect()}
             loc = {(r.set_id, r.cls) for r in fn(cand, clo_l).collect()}
@@ -419,7 +419,7 @@ def test_reduce_local_equals_distributed(spark, monkeypatch):
 
 
 def test_direct_edges_local_equals_distributed(spark, monkeypatch):
-    """_local_direct (witness sweep over the local anc map) must equal
+    """_local_direct_np (witness sweep over the local closure) must equal
     the distributed anti-join form, with and without the edge witness
     set, on randomized DAGs with redundant shortcuts."""
     import random
@@ -436,7 +436,7 @@ def test_direct_edges_local_equals_distributed(spark, monkeypatch):
         dist_c = _pairs(derive_direct_edges(clo_d), "child", "parent")
         monkeypatch.setenv("SUBONT_LOCAL_TC", "auto")
         clo_l = transitive_closure(edges)
-        assert C._get_local_anc(clo_l) is not None
+        assert C.local_of(clo_l) is not None
         loc_e = _pairs(derive_direct_edges(clo_l, edges=edges), "child", "parent")
         loc_c = _pairs(derive_direct_edges(clo_l), "child", "parent")
         assert dist_e == loc_e == dist_c == loc_c, seed
@@ -447,20 +447,96 @@ def test_direct_edges_numpy_path_engages(spark, monkeypatch):
     ENGAGE for an int64 array-backed closure — its result is a local
     relation with no Join in the plan.  (Output equality is gated by
     the randomized test above; this pins the physical path so a silent
-    fallback to the python-dict or distributed form cannot regress the
+    fallback to the distributed form cannot regress the
     round-6 2.57→1.1 s win unnoticed.)"""
     monkeypatch.setenv("SUBONT_LOCAL_TC", "auto")
     edges = spark.createDataFrame(
         [(i, i // 10) for i in range(10, 800)], "child long, parent long"
     )
     clo = transitive_closure(edges)
-    assert getattr(clo, "_subont_local_anc_arrays", None) is not None
-    # the TC probe stashed the collected edge arrays for this object
-    src = getattr(clo, "_subont_local_src_edges", None)
-    assert src is not None and src[0] is edges
+    loc = C.local_of(clo)
+    assert loc is not None
+    # the TC probe kept the collected edge arrays for this object
+    assert loc.witness(edges) is not None and loc.edges() is edges
     d = derive_direct_edges(clo, edges=edges)
     plan = d._jdf.queryExecution().optimizedPlan().toString()
     assert "Join" not in plan, plan
+
+
+def _no_subont_attrs(dfs):
+    from pyspark.sql import DataFrame
+
+    dfs = [df for df in dfs if isinstance(df, DataFrame)]
+    for df in dfs:
+        assert not [k for k in vars(df) if k.startswith("_subont")], vars(df)
+    return len(dfs)
+
+
+def test_local_closure_carrier_lifecycle(spark, monkeypatch, dummy_ont):
+    """The LocalClosure carrier lives beside the DataFrames, never on
+    them: no ``_subont_*`` attribute on any returned DataFrame, and its
+    edge weakref does not pin the caller's edge DataFrame — a new edge
+    object with the same rows still gives the distributed direct edges.
+    (That the carrier survives classify's final checkpoint is checked
+    on the distributed classify of
+    test_local_classify_equals_distributed_fixture.)"""
+    import gc
+
+    from subont.kg import build_kg
+
+    monkeypatch.setenv("SUBONT_LOCAL_TC", "auto")
+    rows = [(i, i // 3) for i in range(3, 60)] + [(i, i // 9) for i in range(9, 60, 4)]
+    edges = spark.createDataFrame(rows, "child long, parent long")
+    clo = transitive_closure(edges)
+    direct = derive_direct_edges(clo, edges=edges)
+    cl_local = classify(dummy_ont)
+    src = spark.createDataFrame(
+        [("r", "p0", "c", "md", "isa(C9, C4) ; isa(C2, C9) ; attr(C3, R0, C9)", "h")],
+        "repo string, path string, commit string, lang string, content string, sha256 string",
+    )
+    kg = build_kg(spark, src)
+    assert kg.trip_names  # the local assembly ran
+    dfs = [clo, direct, *vars(cl_local).values()]
+    dfs += [getattr(kg, k) for k in ("statements", "concepts", "isa_direct", "isa_closure", "triples")]
+    assert _no_subont_attrs(dfs) == 14
+    assert C.local_of(cl_local.closure).anc_map() is cl_local.local.anc
+
+    loc = C.local_of(clo)
+    assert loc.edges() is edges
+    del edges
+    gc.collect()
+    assert loc.edges() is None
+    edges2 = spark.createDataFrame(rows, "child long, parent long")
+    assert loc.witness(edges2) is None
+    monkeypatch.setenv("SUBONT_LOCAL_TC", "off")
+    dist = _pairs(derive_direct_edges(clo, edges=edges2), "child", "parent")
+    monkeypatch.setenv("SUBONT_LOCAL_TC", "auto")
+    assert _pairs(derive_direct_edges(clo, edges=edges2), "child", "parent") == dist
+    assert _pairs(direct, "child", "parent") == dist
+
+
+def test_local_closure_get_equals_anc_map():
+    """LocalClosure.get (binary search before the map exists) agrees
+    with anc_map().get on a random closure; a non-int key gives None."""
+    import random
+
+    import numpy as np
+
+    rng = random.Random(11)
+    edges = [(rng.randint(0, 60), rng.randint(0, 60)) for _ in range(150)]
+    ch = np.array([c for c, _ in edges], np.int64)
+    pa = np.array([p for _, p in edges], np.int64)
+    loc = C.LocalClosure(*C._close_pairs_np(ch, pa, 10**9))
+    want: dict = {}
+    for d, a in zip(loc.desc.tolist(), loc.anc.tolist()):
+        want.setdefault(d, set()).add(a)
+    probes = list(range(-2, 64)) + [np.int64(5), 2**62]
+    assert [loc.get(n) for n in probes] == [want.get(n) for n in probes]
+    assert loc.memo is None  # lookups never built the map
+    assert loc.get("5") is None and loc.get(5.0) is None and loc.get(None) is None
+    assert loc.anc_map() == want
+    assert [loc.get(n) for n in probes] == [want.get(n) for n in probes]
+    assert loc.get("5") is None
 
 
 # ---------------------------------------------------------------------------
@@ -489,6 +565,9 @@ def test_local_classify_equals_distributed_fixture(spark, monkeypatch):
     dist = classify(ont)
     assert dist.local is None
     assert _cl_sets(loc) == _cl_sets(dist)
+    # the local TC rounds' carrier survives classify's final checkpoint
+    assert C.local_of(dist.closure) is not None
+    assert _no_subont_attrs(vars(dist).values()) == 7
 
 
 def test_local_classify_equals_distributed_synth(spark, monkeypatch):
